@@ -42,9 +42,10 @@ case class PointInPolygon(wktExpr: Expression, xExpr: Expression, yExpr: Express
     else TypeCheckResult.TypeCheckSuccess
 
   // ConcurrentHashMap: an expression instance can be evaluated from
-  // multiple task threads in interpreted paths.
+  // multiple task threads in interpreted paths. Keyed by the UTF8String
+  // itself (byte-wise hash and equality), so a hit decodes nothing.
   @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Wkt.Polygon]]()
+    new java.util.concurrent.ConcurrentHashMap[UTF8String, Seq[Wkt.Polygon]]()
 
   private def toDouble(v: Any): Double = v match {
     case d: Double => d
@@ -53,8 +54,10 @@ case class PointInPolygon(wktExpr: Expression, xExpr: Expression, yExpr: Express
   }
 
   override protected def nullSafeEval(wkt: Any, x: Any, y: Any): Any = {
-    val s = wkt.asInstanceOf[UTF8String].toString
-    val polys = cache.computeIfAbsent(s, k => Wkt.parse(k))
+    val s = wkt.asInstanceOf[UTF8String]
+    var polys = cache.get(s)
+    // a miss stores a copy: `s` may point into a reused row buffer
+    if (polys == null) polys = cache.computeIfAbsent(s.clone(), k => Wkt.parse(k.toString))
     Wkt.contains(polys, toDouble(x), toDouble(y))
   }
 

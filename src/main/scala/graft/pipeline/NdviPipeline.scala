@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.raster.{Clip, NdviKernel}
 import graft.sink.Writers
 
@@ -10,10 +11,14 @@ import graft.sink.Writers
   * band pairing (J4/N1) → NDVI kernel (N2–N8) → AOI clip (J5/C5-C6) →
   * per-scene mean (A1) → conflict-semantic sinks (K3–K6).
   *
-  * Where the reference materializes GeoTIFFs on the local filesystem
-  * between stages (main.py:124-125), this plan pipelines: Catalyst sees
-  * filter→join→project→join→aggregate and the only exchanges are the band
-  * join and the final aggregation (SURVEY.md §3 "Spark equivalent").
+  * Where the reference writes a GeoTIFF between stages so each stage runs
+  * once per scene (main.py:124-125), [[run]] materializes three frames
+  * once each as persisted copies: the selected scenes' decoded tiles, the
+  * clipped NDVI tiles and the per-(scene, AOI) means. Every later action
+  * (CRS probe, footprint log, overlap check, run summary) and every
+  * product commit reads those copies, so fetch → decode → pair → NDVI →
+  * clip → mean is evaluated once per run instead of once per action. The
+  * copies are released through [[Result.release]] after the last commit.
   */
 object NdviPipeline {
 
@@ -54,11 +59,22 @@ object NdviPipeline {
     * totals / successes / failures. */
   case class RunSummary(total: Long, succeeded: Long, failed: Long)
 
-  /** Everything the reference's run produces, as lazy frames; callers
-    * write them in stage order (K9 commit ordering). */
+  /** Everything the reference's run produces; callers write the frames
+    * in stage order (K9 commit ordering). The frames read the run's
+    * materialized copies, so [[release]] them only after their last
+    * consumer: [[commitRun]] and [[commitRunTxn]] do so after their last
+    * write; a caller that reads a Result without committing it calls
+    * `release()` itself. A released frame still evaluates correctly; it
+    * re-runs the scene's lineage to do so. */
   case class Result(full: DataFrame, clipped: DataFrame, viz: DataFrame,
                     overviews: Option[DataFrame], mean: DataFrame,
-                    summary: RunSummary)
+                    summary: RunSummary,
+                    private val onRelease: () => Unit = () => ()) {
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    /** Unpersist the run's materialized frames; idempotent. */
+    def release(): Unit = if (released.compareAndSet(false, true)) onRelease()
+  }
 
   /** [[run]] from a bbox-only configuration — the reference's default
     * entry (main.py:100): bootstrap the AOI GeoJSON from
@@ -76,10 +92,13 @@ object NdviPipeline {
       graft.geo.GeoJson.ensureAndReadAoi(spark, settings),
       existingFull, existingClipped, runLog)
 
-  /** The complete reference trace on one lazy lineage (main.py:94-158):
-    * settings → catalog predicates → band pairing + NDVI kernel → AOI
-    * clip → overview pyramid → viz warp to products.reproject_crs →
-    * per-scene mean → K4/K5 upserts → run summary. */
+  /** The complete reference trace (main.py:94-158): settings → catalog
+    * predicates → band pairing + NDVI kernel → AOI clip → overview
+    * pyramid → viz warp to products.reproject_crs → per-scene mean →
+    * K4/K5 upserts → run summary. The selected tiles, the clipped tiles
+    * and the means are materialized once each; if `run` throws after
+    * that, it releases them itself, otherwise the returned [[Result]]
+    * owns them. */
   def run(spark: SparkSession,
           settings: graft.config.Settings,
           catalog: DataFrame,
@@ -95,71 +114,80 @@ object NdviPipeline {
       settings.download.maxCloudCover,
       settings.dates.start, settings.dates.end,
       settings.download.maxItems)
-    val selectedTiles = tiles.join(
-      broadcast(selected.select(col("scene_id"))), Seq("scene_id"))
-    val ndvi = NdviKernel.computeNdvi(selectedTiles)
-    // C4: repair-or-reject invalid AOI geometry at ingest (the reference's
-    // union + buffer(0) step, compute_ndvi.py:115-126) — BEFORE the CRS
-    // reproject, like the reference's to_crs → buffer(0) order.
-    val aoiValid = Clip.validateAoi(aoi)
-    // AOI into the tiles' CRS (C3) when the scene grid is projected and
-    // uniform; mixed-CRS tile tables clip per-CRS upstream.
-    val tileEpsgs = selectedTiles.select("epsg").distinct()
-      .collect().map(_.getInt(0))
-    val aoiInTileCrs =
-      if (tileEpsgs.length == 1) Clip.reprojectAoi(aoiValid, tileEpsgs.head)
-      else aoiValid
-    // C2: footprint sanity log — selected scenes' envelope reprojected to
-    // WGS84, rounded 4dp (compute_ndvi.py:101-106); best-effort like the
-    // reference's try/except-pass.
-    if (tileEpsgs.length == 1) try {
-      val b = Clip.tileBounds(selectedTiles)
-        .agg(min(col("t_minx")), min(col("t_miny")),
-             max(col("t_maxx")), max(col("t_maxy"))).head
-      val corners = Seq((b.getDouble(0), b.getDouble(1)), (b.getDouble(2), b.getDouble(1)),
-                        (b.getDouble(0), b.getDouble(3)), (b.getDouble(2), b.getDouble(3)))
-        .map { case (x, y) => graft.geo.Geodesy.transformPoint(x, y, tileEpsgs.head, 4326) }
-      def r4(v: Double) = math.rint(v * 1e4) / 1e4
-      runLog.info(s"Raster bounds (WGS84): (${r4(corners.map(_._1).min)}, " +
-        s"${r4(corners.map(_._2).min)}, ${r4(corners.map(_._1).max)}, " +
-        s"${r4(corners.map(_._2).max)})")
-    } catch { case _: Exception => () }
-    val clippedTiles = Clip.clipToAoi(ndvi, aoiInTileCrs)
-    // the reference raises eagerly when nothing overlaps
-    // (compute_ndvi.py:128-131)
-    val nScenes = selected.count()
-    Clip.requireOverlap(clippedTiles, inputNonEmpty = nScenes > 0)
-    // mean per (scene, aoi) — the reference keys ndvi_clipped.mean_ndvi by
-    // (full_id, aoi_id); pooling across AOIs would double-count overlap.
-    val mean = NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id"))
-    // per-AOI clipped products: the grid key for downstream per-image ops
-    // is (scene, aoi), encoded in the warp group key.
-    val clippedBands = clippedTiles
-      .withColumn("scene_id", concat_ws("#", col("scene_id"), col("aoi_id")))
-      .select(tileCols.map(col): _*)
-    val overviews =
-      if (settings.products.buildOverviews)
-        Some(graft.raster.Resample.pyramid(clippedBands))  // [2,4,8,16,32]
-      else None
-    val vizEpsg = settings.products.reprojectCrs.stripPrefix("EPSG:").toInt
-    val viz = graft.raster.Resample.reprojectScenes(spark,
-      clippedBands.as[graft.model.RasterModel.BandTile],
-      vizEpsg, resM = 0.0 /* derive from source resolution */).toDF()
-    // acquisition_date per scene from the catalog's datetime
-    // (reference parses it per scene, load_to_postgis.py:178-183)
-    val newFull = ndvi.select(col("scene_id")).distinct()
-      .join(broadcast(selected.select(col("scene_id"),
-        col("datetime").cast("date").as("acquisition_date"))), Seq("scene_id"))
-    val newClipped = mean
-      .select(col("scene_id"), col("aoi_id"), col("mean_ndvi"))
-    val (full, clippedTable) = loadStage(
-      existingFull, newFull,
-      existingClipped, newClipped)
-    val nOk = mean.filter(col("mean_ndvi").isNotNull)
-      .select(col("scene_id")).distinct().count()
-    runLog.info(s"Run summary: total=$nScenes succeeded=$nOk failed=${nScenes - nOk}")
-    Result(full, clippedTable, viz, overviews, mean,
-      RunSummary(nScenes, nOk, nScenes - nOk))
+    val releases = collection.mutable.ArrayBuffer.empty[() => Unit]
+    def releaseAll(): Unit = releases.foreach(_())
+    def materialize(df: DataFrame): DataFrame = {
+      val (m, release) = Bridge.materializeReleasable(spark, df)
+      releases += release
+      m
+    }
+    try {
+      val selectedTiles = materialize(tiles.join(
+        broadcast(selected.select(col("scene_id"))), Seq("scene_id")))
+      val ndvi = NdviKernel.computeNdvi(selectedTiles)
+      // C4: repair-or-reject invalid AOI geometry at ingest (the reference's
+      // union + buffer(0) step, compute_ndvi.py:115-126) — BEFORE the CRS
+      // reproject, like the reference's to_crs → buffer(0) order.
+      val aoiValid = Clip.validateAoi(aoi)
+      // AOI into the tiles' CRS (C3) when the scene grid is projected and
+      // uniform; mixed-CRS tile tables clip per-CRS upstream.
+      val tileEpsgs = selectedTiles.select("epsg").distinct()
+        .collect().map(_.getInt(0))
+      val aoiInTileCrs =
+        if (tileEpsgs.length == 1) Clip.reprojectAoi(aoiValid, tileEpsgs.head)
+        else aoiValid
+      // C2: footprint sanity log — selected scenes' envelope reprojected to
+      // WGS84, rounded 4dp (compute_ndvi.py:101-106); best-effort like the
+      // reference's try/except-pass.
+      if (tileEpsgs.length == 1) try {
+        val b = Clip.tileBounds(selectedTiles)
+          .agg(min(col("t_minx")), min(col("t_miny")),
+               max(col("t_maxx")), max(col("t_maxy"))).head
+        val corners = Seq((b.getDouble(0), b.getDouble(1)), (b.getDouble(2), b.getDouble(1)),
+                          (b.getDouble(0), b.getDouble(3)), (b.getDouble(2), b.getDouble(3)))
+          .map { case (x, y) => graft.geo.Geodesy.transformPoint(x, y, tileEpsgs.head, 4326) }
+        def r4(v: Double) = math.rint(v * 1e4) / 1e4
+        runLog.info(s"Raster bounds (WGS84): (${r4(corners.map(_._1).min)}, " +
+          s"${r4(corners.map(_._2).min)}, ${r4(corners.map(_._1).max)}, " +
+          s"${r4(corners.map(_._2).max)})")
+      } catch { case _: Exception => () }
+      val clippedTiles = materialize(Clip.clipToAoi(ndvi, aoiInTileCrs))
+      // the reference raises eagerly when nothing overlaps
+      // (compute_ndvi.py:128-131)
+      val nScenes = selected.count()
+      Clip.requireOverlap(clippedTiles, inputNonEmpty = nScenes > 0)
+      // mean per (scene, aoi) — the reference keys ndvi_clipped.mean_ndvi by
+      // (full_id, aoi_id); pooling across AOIs would double-count overlap.
+      val mean = materialize(NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id")))
+      // per-AOI clipped products: the grid key for downstream per-image ops
+      // is (scene, aoi), encoded in the warp group key.
+      val clippedBands = clippedTiles
+        .withColumn("scene_id", concat_ws("#", col("scene_id"), col("aoi_id")))
+        .select(tileCols.map(col): _*)
+      val overviews =
+        if (settings.products.buildOverviews)
+          Some(graft.raster.Resample.pyramid(clippedBands))  // [2,4,8,16,32]
+        else None
+      val vizEpsg = settings.products.reprojectCrs.stripPrefix("EPSG:").toInt
+      val viz = graft.raster.Resample.reprojectScenes(spark,
+        clippedBands.as[graft.model.RasterModel.BandTile],
+        vizEpsg, resM = 0.0 /* derive from source resolution */).toDF()
+      // acquisition_date per scene from the catalog's datetime
+      // (reference parses it per scene, load_to_postgis.py:178-183)
+      val newFull = ndvi.select(col("scene_id")).distinct()
+        .join(broadcast(selected.select(col("scene_id"),
+          col("datetime").cast("date").as("acquisition_date"))), Seq("scene_id"))
+      val newClipped = mean
+        .select(col("scene_id"), col("aoi_id"), col("mean_ndvi"))
+      val (full, clippedTable) = loadStage(
+        existingFull, newFull,
+        existingClipped, newClipped)
+      val nOk = mean.filter(col("mean_ndvi").isNotNull)
+        .select(col("scene_id")).distinct().count()
+      runLog.info(s"Run summary: total=$nScenes succeeded=$nOk failed=${nScenes - nOk}")
+      Result(full, clippedTable, viz, overviews, mean,
+        RunSummary(nScenes, nOk, nScenes - nOk), () => releaseAll())
+    } catch { case e: Throwable => releaseAll(); throw e }
   }
 
   /** K9 with snapshot isolation end-to-end: commit the run's product
@@ -170,7 +198,8 @@ object NdviPipeline {
     * stage 3's commit keeps reading that version's immutable files, and
     * the pre-merge ndvi_clipped stays reachable by time travel until
     * expired — the properties the directory-protocol writers can't give.
-    * Returns table name → committed version. */
+    * Returns table name → committed version. Releases `r` after the last
+    * write, whether or not the writes succeed. */
   def commitRun(spark: SparkSession, r: Result, rootDir: String): Map[String, Int] = {
     import graft.sink.VersionedTable
     def commitTable(name: String, df: DataFrame): (String, Int) = {
@@ -184,10 +213,11 @@ object NdviPipeline {
     // stage order is load-bearing (K9): a failure mid-sequence leaves the
     // earlier tables committed and the later ones at their prior version —
     // exactly the reference's stop-on-first-failure loader contract.
-    Seq(
+    try Seq(
       commitTable("ndvi_full", r.full),
       commitTable("ndvi_clipped", r.clipped),
       commitTable("ndvi_viz", r.viz)).toMap
+    finally r.release()
   }
 
   /** [[commitRun]] upgraded to CROSS-TABLE atomicity: the three product
@@ -199,14 +229,16 @@ object NdviPipeline {
     * tables, never a mix. Catalog readers (`TxnCatalog.read(catRoot,
     * name)`) get the consistent run; raw per-table readers keep the
     * stop-on-first-failure view [[commitRun]] documents. Returns the txn
-    * number and the per-table pins it published. */
+    * number and the per-table pins it published. Releases `r` after the
+    * transaction, like [[commitRun]]. */
   def commitRunTxn(spark: SparkSession, r: Result, rootDir: String):
       (Int, Map[String, Int]) = {
     import graft.sink.TxnCatalog
-    val txn = TxnCatalog.commitTables(spark, s"$rootDir/_catalog",
+    val txn = try TxnCatalog.commitTables(spark, s"$rootDir/_catalog",
       Seq("ndvi_full" -> r.full, "ndvi_clipped" -> r.clipped,
         "ndvi_viz" -> r.viz),
       name => s"$rootDir/$name")
+    finally r.release()
     val snap = TxnCatalog.snapshot(spark, s"$rootDir/_catalog")
     (txn, snap.tables.map { case (k, (_, v)) => k -> v })
   }

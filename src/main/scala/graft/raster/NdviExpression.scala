@@ -2,10 +2,10 @@ package graft.raster
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, NullType, NumericType}
@@ -111,21 +111,23 @@ case class NdviKernelExpr(children: Seq[Expression]) extends Expression {
 object NdviKernelExpr {
 
   /** The kernel body (shared by eval and generated code): one imperative
-    * float32 loop per tile. NaN nodata sentinel = no declared nodata
-    * (NaN == x is false for every x, so the mask term vanishes). */
+    * float32 loop per tile, written straight into a primitive
+    * UnsafeArrayData (masked pixel = null bit). NaN nodata sentinel = no
+    * declared nodata (NaN == x is false for every x, so the mask term
+    * vanishes). */
   def compute(red: ArrayData, nir: ArrayData, rnd: Float, nnd: Float): ArrayData = {
     val nPx = red.numElements()
-    val out = new Array[Any](nPx)
+    val out = UnsafeArrayData.createFreshArray(nPx, 4)
     var i = 0
     while (i < nPx) {
       if (red.isNullAt(i) || nir.isNullAt(i)) {
-        out(i) = null
+        out.setNullAt(i)
       } else {
         val r0 = red.getFloat(i)
         val n0 = nir.getFloat(i)
         // N3: raw-DN mask (fill 0 + declared nodata) BEFORE scaling
         if (r0 == 0f || n0 == 0f || r0 == rnd || n0 == nnd) {
-          out(i) = null
+          out.setNullAt(i)
         } else {
           // N4: float32 scaling
           val r = r0 * NdviKernel.Scale + NdviKernel.Offset
@@ -133,21 +135,21 @@ object NdviKernelExpr {
           // N5: non-finite mask
           if (java.lang.Float.isNaN(r) || java.lang.Float.isInfinite(r) ||
               java.lang.Float.isNaN(n) || java.lang.Float.isInfinite(n)) {
-            out(i) = null
+            out.setNullAt(i)
           } else {
             // N6: true float32 epsilon-safe division; N8: clamp
             val v = (n - r) / (n + r + NdviKernel.Eps)
             val clamped = if (java.lang.Float.isNaN(v)) v
               else if (v < -1f) -1f else if (v > 1f) 1f else v
-            out(i) = if (java.lang.Float.isNaN(clamped) ||
-                         java.lang.Float.isInfinite(clamped)) null
-                     else java.lang.Float.valueOf(clamped)
+            if (java.lang.Float.isNaN(clamped) || java.lang.Float.isInfinite(clamped))
+              out.setNullAt(i)
+            else out.setFloat(i, clamped)
           }
         }
       }
       i += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** Column wrapper: ndvi_kernel(redPx, nirPx, redNodata, nirNodata). */

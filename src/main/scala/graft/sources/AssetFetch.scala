@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.catalog.SceneCatalog
 import graft.model.RasterModel.BandTile
 import graft.sink.Writers
@@ -135,9 +136,12 @@ object AssetFetch {
     val ok = col("error").isNull &&
       SceneCatalog.validDownload(col("content_type"), col("size_bytes"), minBytes)
     val (valid, rejected) = Writers.splitRejects(fetched, ok, "invalid_download")
-    val tiles = valid.select("scene_id", "band", "content")
-      .as[(String, String, Array[Byte])]
-      .flatMap { case (s, b, bytes) => GeoTiff.toBandTiles(s, b, bytes) }
+    val tiles = Bridge.flatMapRows(spark, valid.select("scene_id", "band", "content"),
+      GeoTiff.tileRowSchema)(_.flatMap { row =>
+        // the input row's buffer is reused: copy the keys the tiles keep
+        def key(i: Int) = if (row.isNullAt(i)) null else row.getUTF8String(i).copy()
+        GeoTiff.tileRows(key(0), key(1), row.getBinary(2))
+      }).as[BandTile]
     val rejects = rejected
       .withColumn("reject_reason", coalesce(col("error"), col("reject_reason")))
       .drop("content")

@@ -2,7 +2,12 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{Deflater, Inflater}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.RasterModel.{BandTile, TileSize}
 
 /** S3: pure-JVM reader (and test-fixture writer) for the tiled-GeoTIFF
@@ -280,7 +285,12 @@ object GeoTiff {
   /** Decode TIFF LZW: 9→12-bit codes, MSB-first, ClearCode 256, EOI 257,
     * "early change" (code width grows when the NEXT table slot is
     * (1<<width)-1 — one entry earlier than plain LZW; TIFF 6.0 §13). */
-  private[graft] def lzwDecode(data: Array[Byte], outLen: Int): Array[Byte] = {
+  private[graft] def lzwDecode(data: Array[Byte], outLen: Int): Array[Byte] =
+    lzwDecode(data, 0, data.length, outLen)
+
+  /** [[lzwDecode]] over `data(off until off + len)`. */
+  private def lzwDecode(data: Array[Byte], off: Int, len: Int, outLen: Int): Array[Byte] = {
+    val end = off + len
     val out = new Array[Byte](outLen)
     var outOff = 0
     val table = new Array[Array[Byte]](4096)
@@ -289,9 +299,9 @@ object GeoTiff {
     var next = 258
     var width = 9
     var old = -1
-    var acc = 0L; var nBits = 0; var pos = 0
+    var acc = 0L; var nBits = 0; var pos = off
     def read(): Int = {
-      while (nBits < width && pos < data.length) {
+      while (nBits < width && pos < end) {
         acc = (acc << 8) | (data(pos) & 0xffL); pos += 1; nBits += 8
       }
       if (nBits < width) LzwEoi
@@ -459,99 +469,159 @@ object GeoTiff {
     }
   }
 
-  private def inflate(data: Array[Byte], outLen: Int): Array[Byte] = {
+  /** A tile (or strip) the reader cannot decode; the message names it. */
+  final class DecodeException(msg: String, cause: Throwable = null)
+      extends IllegalArgumentException(msg, cause)
+
+  /** Inflate `data(off until off + len)` into `outLen` bytes. A stream
+    * that stops short (truncated input, a preset-dictionary header, or a
+    * call that consumes and produces nothing) is a [[DecodeException]]
+    * naming `tile`, never a spin; the native inflater is ended on every
+    * path. */
+  private def inflate(data: Array[Byte], off: Int, len: Int, outLen: Int,
+                      tile: Int): Array[Byte] = {
     val inf = new Inflater()
-    inf.setInput(data)
-    val out = new Array[Byte](outLen)
-    var off = 0
-    while (off < outLen && !inf.finished()) {
-      val n = inf.inflate(out, off, outLen - off)
-      if (n == 0 && inf.needsInput())
-        throw new IllegalArgumentException("Truncated deflate tile")
-      off += n
-    }
-    inf.end()
-    out
+    try {
+      inf.setInput(data, off, len)
+      val out = new Array[Byte](outLen)
+      var n = 0
+      while (n < outLen && !inf.finished()) {
+        val before = inf.getRemaining
+        val k = inf.inflate(out, n, outLen - n)
+        if (k == 0) {
+          if (inf.needsDictionary())
+            throw new DecodeException(s"Deflate tile $tile needs a preset dictionary")
+          if (inf.needsInput())
+            throw new DecodeException(s"Truncated deflate tile $tile")
+          if (inf.getRemaining == before)
+            throw new DecodeException(s"Deflate tile $tile makes no progress")
+        }
+        n += k
+      }
+      out
+    } catch {
+      case e: java.util.zip.DataFormatException =>
+        throw new DecodeException(s"Corrupt deflate tile $tile: ${e.getMessage}", e)
+    } finally inf.end()
   }
 
   /** Decode one TIFF's level-0 image into BandTile rows (one per interior
     * tile, edge tiles clipped). Raw DN values kept as floats; `nodata`
-    * recorded, not masked. */
+    * recorded, not masked. A typed view of [[decodeLevel]]; the Spark
+    * sources use [[tileRows]], which skips the per-pixel boxing. */
   def toBandTiles(sceneId: String, band: String, bytes: Array[Byte]): Seq[BandTile] =
-    decodeLevel(sceneId, band, bytes, readInfos(bytes).head)
+    toBandTiles(sceneId, band, bytes, 0)
 
   /** Decode one IFD level (0 = full resolution, k = k-th embedded
     * overview) into BandTile rows. */
   def toBandTiles(sceneId: String, band: String, bytes: Array[Byte],
-                  level: Int): Seq[BandTile] =
-    decodeLevel(sceneId, band, bytes, readInfos(bytes)(level))
+                  level: Int): Seq[BandTile] = {
+    val info = readInfos(bytes)(level)
+    decodeLevel(bytes, info).map { t =>
+      BandTile(sceneId, band, t.col, t.row, t.width, t.height, info.epsg,
+        info.transform, info.nodata, t.px.toSeq.map(Some(_)))
+    }.toIndexedSeq
+  }
 
-  private def decodeLevel(sceneId: String, band: String, bytes: Array[Byte],
-                          info: Info): Seq[BandTile] = {
+  /** One decoded tile: grid position, clipped size, and its raw DN samples
+    * row-major in a primitive buffer. */
+  private final case class Decoded(col: Int, row: Int, width: Int, height: Int,
+                                   px: Array[Float])
+
+  /** The single decode loop: one level's tiles in row-major grid order,
+    * lazily, so a consumer holds one tile's buffers at a time. Payloads
+    * are read in place from `bytes`. */
+  private def decodeLevel(bytes: Array[Byte], info: Info): Iterator[Decoded] = {
     val order =
       if (bytes(0) == 'I') ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
     val bytesPerSample = info.bitsPerSample / 8
     val tilesAcross = (info.width + info.tileW - 1) / info.tileW
     val tilesDown = (info.height + info.tileH - 1) / info.tileH
-    (0 until tilesDown).flatMap { tr =>
-      (0 until tilesAcross).map { tc =>
-        val ti = tr * tilesAcross + tc
-        val w = math.min(info.tileW, info.width - tc * info.tileW)
-        val h = math.min(info.tileH, info.height - tr * info.tileH)
-        // tile rows are padded to tileW; strip rows are exactly the image
-        // width and the LAST strip is short — stride and length differ
-        val stride = if (info.stripLayout) info.width else info.tileW
-        val rawLen =
-          (if (info.stripLayout) stride * h else info.tileW * info.tileH) * bytesPerSample
-        val payload = java.util.Arrays.copyOfRange(bytes,
-          info.tileOffsets(ti).toInt,
-          (info.tileOffsets(ti) + info.tileByteCounts(ti)).toInt)
-        val raw = info.compression match {
-          case 8 => inflate(payload, rawLen)
-          case 5 => lzwDecode(payload, rawLen)
-          case _ => payload
-        }
-        if (info.predictor == 2) undiffRows16(raw, order, stride)
-        else if (info.predictor == 3) undiffRowsFP(raw, order, stride)
-        val tb = ByteBuffer.wrap(raw).order(order)
-        val px = new Array[Option[Float]](w * h)
-        var r = 0
-        while (r < h) {
-          var c = 0
-          while (c < w) {
-            val p = (r * stride + c) * bytesPerSample
-            px(r * w + c) = Some(
-              if (bytesPerSample == 2) (tb.getShort(p) & 0xffff).toFloat
-              else tb.getFloat(p))
-            c += 1
-          }
-          r += 1
-        }
-        BandTile(sceneId, band, tc, tr, w, h, info.epsg, info.transform,
-          info.nodata, px.toSeq)
+    Iterator.range(0, tilesDown * tilesAcross).map { ti =>
+      val tr = ti / tilesAcross
+      val tc = ti % tilesAcross
+      val w = math.min(info.tileW, info.width - tc * info.tileW)
+      val h = math.min(info.tileH, info.height - tr * info.tileH)
+      // tile rows are padded to tileW; strip rows are exactly the image
+      // width and the LAST strip is short — stride and length differ
+      val stride = if (info.stripLayout) info.width else info.tileW
+      val rawLen =
+        (if (info.stripLayout) stride * h else info.tileW * info.tileH) * bytesPerSample
+      val off = info.tileOffsets(ti)
+      val len = info.tileByteCounts(ti)
+      if (off < 0 || len < 0 || off + len > bytes.length)
+        throw new DecodeException(
+          s"Tile $ti byte range [$off, ${off + len}) lies outside the ${bytes.length}-byte file")
+      // (raw, base): the decoded samples and where they start in `raw`
+      val (raw, base) = info.compression match {
+        case 8 => (inflate(bytes, off.toInt, len.toInt, rawLen, ti), 0)
+        case 5 => (lzwDecode(bytes, off.toInt, len.toInt, rawLen), 0)
+        case _ =>
+          if (len < rawLen)
+            throw new DecodeException(s"Tile $ti holds $len of $rawLen bytes")
+          // the predictors undo in place: never on the caller's bytes
+          if (info.predictor == 1) (bytes, off.toInt)
+          else (java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + rawLen), 0)
       }
+      if (info.predictor == 2) undiffRows16(raw, order, stride)
+      else if (info.predictor == 3) undiffRowsFP(raw, order, stride)
+      val tb = ByteBuffer.wrap(raw).order(order)
+      val px = new Array[Float](w * h)
+      var r = 0
+      while (r < h) {
+        var c = 0
+        while (c < w) {
+          val p = base + (r * stride + c) * bytesPerSample
+          px(r * w + c) =
+            if (bytesPerSample == 2) (tb.getShort(p) & 0xffff).toFloat
+            else tb.getFloat(p)
+          c += 1
+        }
+        r += 1
+      }
+      Decoded(tc, tr, w, h, px)
+    }
+  }
+
+  /** The schema of [[tileRows]]: the band_tiles columns and types of
+    * [[graft.model.RasterModel.bandTileSchema]] with the nullability of
+    * the [[BandTile]] encoder, so a frame of these rows is
+    * interchangeable with one encoded from BandTile values. */
+  private[sources] lazy val tileRowSchema: StructType = Encoders.product[BandTile].schema
+
+  /** Level 0 of one TIFF as band_tiles rows in [[tileRowSchema]]: the
+    * rows [[toBandTiles]] describes, with `pixels` an UnsafeArrayData
+    * built straight from the decode buffer. */
+  private[sources] def tileRows(scene: UTF8String, band: UTF8String,
+                                bytes: Array[Byte]): Iterator[InternalRow] = {
+    val info = readInfos(bytes).head
+    val transform = UnsafeArrayData.fromPrimitiveArray(info.transform.toArray)
+    val nodata: Any = info.nodata.orNull
+    decodeLevel(bytes, info).map { t =>
+      new GenericInternalRow(Array[Any](scene, band, t.col, t.row, t.width, t.height,
+        info.epsg, transform, nodata, UnsafeArrayData.fromPrimitiveArray(t.px)))
     }
   }
 
   /** Directory of `<scene_id>_<band>.tif` files → band_tiles Dataset, via
     * the binaryFile source: one file per input row, decoded in parallel
-    * across files (mapPartitions-style typed flatMap; justified — TIFF
-    * decode is genuinely imperative byte work). */
+    * across files ([[tileRows]] per file; justified — TIFF decode is
+    * genuinely imperative byte work). */
   def bandTiles(spark: SparkSession, dir: String): Dataset[BandTile] = {
     import spark.implicits._
-    spark.read.format("binaryFile")
+    val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.tif")
       .load(dir)
       .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val stem = path.substring(path.lastIndexOf('/') + 1)
-          .stripSuffix(".tif")
-        val cut = stem.lastIndexOf('_')
-        val (scene, band) =
-          if (cut < 0) (stem, "b1") else (stem.take(cut), stem.drop(cut + 1))
-        toBandTiles(scene, band, content)
-      }
+    Bridge.flatMapRows(spark, files, tileRowSchema)(_.flatMap { row =>
+      val path = row.getUTF8String(0).toString
+      val stem = path.substring(path.lastIndexOf('/') + 1)
+        .stripSuffix(".tif")
+      val cut = stem.lastIndexOf('_')
+      val (scene, band) =
+        if (cut < 0) (stem, "b1") else (stem.take(cut), stem.drop(cut + 1))
+      tileRows(UTF8String.fromString(scene), UTF8String.fromString(band), row.getBinary(1))
+    }).as[BandTile]
   }
 
   // ---- writer (synthetic fixtures + sink parity) ---------------------------

@@ -29,6 +29,20 @@ object Bridge {
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.logical)
 
+  /** A frame with `schema` whose rows are `f` over each partition of
+    * `df`'s internal rows: a flatMap that hands Spark InternalRows
+    * directly (no encoder, so no per-element boxing of array columns).
+    * The input rows may be reused buffers; `f` must copy what it keeps. */
+  def flatMapRows(s: org.apache.spark.sql.SparkSession,
+                  df: org.apache.spark.sql.DataFrame,
+                  schema: org.apache.spark.sql.types.StructType)(
+      f: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+        .queryExecution.toRdd.mapPartitions(f), schema)
+
   /** Materialize a DataFrame ONCE as a persisted InternalRow RDD and
     * wrap it as a fresh DataFrame whose plan is a bare LogicalRDD.
     * Like `localCheckpoint()` but WITHOUT carrying the origin plan's

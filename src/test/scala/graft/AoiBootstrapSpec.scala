@@ -82,5 +82,6 @@ class AoiBootstrapSpec extends SparkSpec {
     // clip identically to the hand-written fixture AOI
     assert(math.abs(m.getDouble(2) - -0.18965584) < 1e-6)
     assert(m.getLong(3) == 8100)
+    r.release()
   }
 }

@@ -73,6 +73,53 @@ class EndToEndSpec extends SparkSpec {
       r.full, r.clipped)
     assert(r2.full.count() == 1)
     assert(r2.clipped.count() == 1)
+    // neither result is committed: release r2, then r, whose frames r2 read
+    r2.release()
+    r.release()
+  }
+
+  private def emptyFull = Seq.empty[(String, java.sql.Date)]
+    .toDF("scene_id", "acquisition_date")
+  private def emptyClipped = Seq.empty[(String, Long, Double)]
+    .toDF("scene_id", "aoi_id", "mean_ndvi")
+
+  test("run + commitRun evaluate each input tile exactly once") {
+    val base = RasterModel.dummyConstant(spark)
+    val nTiles = base.count()
+    val evals = spark.sparkContext.longAccumulator("tile_evaluations")
+    val tiles = base.as[RasterModel.BandTile].map { t => evals.add(1); t }.toDF()
+    val root = java.nio.file.Files.createTempDirectory("graft_once").toString
+    val r = NdviPipeline.run(spark, settings, catalog, tiles,
+      RasterModel.aoiOverlap(spark), emptyFull, emptyClipped)
+    assert(NdviPipeline.commitRun(spark, r, root) ==
+      Map("ndvi_full" -> 1, "ndvi_clipped" -> 1, "ndvi_viz" -> 1))
+    assert(evals.value == nTiles,
+      s"${evals.value} tile evaluations for $nTiles input tiles")
+  }
+
+  test("run's materialized tiles are released after commitRun, after commitRunTxn " +
+    "and when run throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def leaked = sc.getPersistentRDDs.keySet -- before
+    def runOn(aoi: org.apache.spark.sql.DataFrame) =
+      NdviPipeline.run(spark, settings, catalog, RasterModel.dummyConstant(spark),
+        aoi, emptyFull, emptyClipped)
+    def freshDir() = java.nio.file.Files.createTempDirectory("graft_release").toString
+
+    val r1 = runOn(RasterModel.aoiOverlap(spark))
+    assert(leaked.nonEmpty, "run holds its materialized tiles until the commit")
+    NdviPipeline.commitRun(spark, r1, freshDir())
+    assert(leaked.isEmpty, s"commitRun left persisted RDD(s) behind: ids $leaked")
+
+    val (txn, _) = NdviPipeline.commitRunTxn(spark, runOn(RasterModel.aoiOverlap(spark)),
+      freshDir())
+    assert(txn == 1)
+    assert(leaked.isEmpty, s"commitRunTxn left persisted RDD(s) behind: ids $leaked")
+
+    val e = intercept[IllegalArgumentException](runOn(RasterModel.aoiDisjoint(spark)))
+    assert(e.getMessage == "Input shapes do not overlap raster")
+    assert(leaked.isEmpty, s"a failed run left persisted RDD(s) behind: ids $leaked")
   }
 
   test("versioned sinks: snapshot reader survives a stage-3 commit; time travel returns the pre-merge ndvi_clipped") {

@@ -23,6 +23,36 @@ class FunctionsSpec extends SparkSpec {
     assert(ndvi.head == -0.18965584f)
   }
 
+  test("st_contains: the same WKT as a fresh string and over a reused buffer gives identical answers") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{DoubleType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val pip = graft.geo.PointInPolygon(BoundReference(0, StringType, nullable = false),
+      BoundReference(1, DoubleType, nullable = false),
+      BoundReference(2, DoubleType, nullable = false))
+    val a = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+    val b = "POLYGON ((5 5, 9 5, 9 9, 5 9, 5 5))"
+    val pts = Seq((2.0, 2.0), (7.0, 7.0), (4.5, 4.5), (0.5, 3.5))
+    def answers(wkt: UTF8String) = pts.map { case (x, y) => pip.eval(InternalRow(wkt, x, y)) }
+    // a scan's row buffer: the WKT sits at an offset, and the same bytes
+    // are overwritten by the next row's value
+    val buf = new Array[Byte](a.length + 16)
+    def over(wkt: String): UTF8String = {
+      val bytes = wkt.getBytes("UTF-8")
+      System.arraycopy(bytes, 0, buf, 8, bytes.length)
+      UTF8String.fromBytes(buf, 8, bytes.length)
+    }
+    val reusedA = answers(over(a))
+    val reusedB = answers(over(b))
+    val freshA = answers(UTF8String.fromString(a))
+    val freshB = answers(UTF8String.fromString(b))
+    assert(reusedA == Seq(true, false, false, true))
+    assert(reusedB == Seq(false, true, false, false))
+    assert(freshA == reusedA && freshB == reusedB)
+    assert(answers(over(a)) == reusedA)
+  }
+
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct arrays") {
     import graft.functions.Portable.sortedIntersectCount
     val rnd = new scala.util.Random(42)

@@ -228,6 +228,32 @@ class GeoTiffSpec extends SparkSpec {
         rowsPerStrip = 32, compression = 5, predictor = 7))
   }
 
+  test("a deflate tile that asks for a preset dictionary fails with a decode error " +
+    "naming the tile instead of hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val good = GeoTiff.write(data, w, h, 32635, tf, Some(0.0), ts, deflate = true)
+    val info = GeoTiff.readInfo(good)
+    // tile 1's payload replaced in place by a zlib stream whose header
+    // asks for a preset dictionary (FDICT)
+    val raw = new Array[Byte](ts * ts * 2)
+    val d = new java.util.zip.Deflater()
+    val payload = try {
+      d.setDictionary(Array.fill[Byte](64)(7))
+      d.setInput(raw)
+      d.finish()
+      val buf = new Array[Byte](raw.length)
+      buf.take(d.deflate(buf))
+    } finally d.end()
+    assert(payload.length <= info.tileByteCounts(1))
+    val bad = good.clone()
+    System.arraycopy(payload, 0, bad, info.tileOffsets(1).toInt, payload.length)
+    val e = intercept[GeoTiff.DecodeException](
+      Await.result(Future(GeoTiff.toBandTiles("S", "red", bad)), 30.seconds))
+    assert(e.getMessage == "Deflate tile 1 needs a preset dictionary")
+  }
+
   test("reader rejects non-TIFF and unsupported layouts") {
     intercept[IllegalArgumentException] {
       GeoTiff.readInfo("not a tiff at all".getBytes)
