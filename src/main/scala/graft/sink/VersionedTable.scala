@@ -24,11 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (removed by [[expire]]). The newest manifest in `_log/` IS the table
   * state: there is no mutable pointer file to corrupt.
   *
-  * Why this matters at 100 TB: [[Writers.compact]] swaps a directory via
-  * rename-aside and documents the reader-visible gap; here a compaction
-  * or overwrite is just a new manifest — concurrent readers that resolved
-  * version N keep reading N's immutable files, and time travel/rollback
-  * fall out for free.
+  * Why this matters at 100 TB: swapping a table directory by
+  * rename-aside leaves a gap in which readers see no table; here a
+  * compaction or overwrite is just a new manifest — concurrent readers
+  * that resolved version N keep reading N's immutable files, and time
+  * travel/rollback fall out for free.
   *
   * Concurrency: the manifest name itself is the CAS — exactly one writer
   * can claim a version number (hard link on local FS, fail-if-exists
@@ -5075,12 +5075,10 @@ object VersionedTable {
     * and any nondeterministic source expression is FIXED across them.
     * Bounded: the row set is the merge's changed rows (CDC-batch-sized,
     * never table-sized — the same bound Delta's materialization
-    * accepts). Kill switch: spark.graft.merge.materialize=false. */
+    * accepts). */
   private def materializeOnce(spark: SparkSession, df: DataFrame)
       : (DataFrame, () => Unit) =
-    if (!spark.conf.get("spark.graft.merge.materialize", "true").toBoolean ||
-        alreadyTruncated(df))
-      (df, () => ())
+    if (alreadyTruncated(df)) (df, () => ())
     else org.apache.spark.sql.graftbridge.Bridge.materializeReleasable(spark, df)
 
   /** A frame that is just deterministic narrow ops over an
@@ -5419,13 +5417,8 @@ object VersionedTable {
     // that re-evaluates (and re-plans) the caller's arbitrary source
     // dataflow. Materialize it ONCE up front (r19; the same Delta
     // materializeSource shape the inner merge paths apply to the built
-    // row set) and release after the commit. Kill switch:
-    // spark.graft.mergeWhen.materializeSource (the inner paths' switch
-    // spark.graft.merge.materialize also disables it).
-    val (source, releaseSrc) =
-      if (!spark.conf.get("spark.graft.mergeWhen.materializeSource", "true")
-          .toBoolean) (source0, () => ())
-      else materializeOnce(spark, source0)
+    // row set) and release after the commit.
+    val (source, releaseSrc) = materializeOnce(spark, source0)
     try {
     val m = readManifest(spark, root, cur)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
@@ -5619,6 +5612,7 @@ object VersionedTable {
                    txn: Option[Long] = None): Int = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graftbridge.Bridge
     require(keys.nonEmpty, "applyChanges needs at least one key column")
     val cur = currentVersion(spark, root)
       .getOrElse(throw new IllegalArgumentException(s"no table at $root"))
@@ -5663,55 +5657,20 @@ object VersionedTable {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(seqCol).desc, xxhash64(tieCols: _*).desc)
     // The winner set feeds the pruning bounds, the stale-guard join,
-    // and both op splits — FOUR consumers of one frame. It must be
-    // MATERIALIZED first (the Delta merge materializeSource rule)
-    // unless every re-evaluation provably yields the same rows:
-    // otherwise keys could appear OUTSIDE the bounds the first pass
-    // captured, their target files prune away, their current rows go
-    // unseen, and a STALE change slips the guard. Stable means
-    // deterministic expressions AND stable leaves — local rows,
-    // RDD-backed frames, file scans (their FileIndex resolves once per
-    // frame), or a version-PINNED graft relation. A JDBC/DSv2/other
-    // external leaf, or a current-version graft relation (it re-resolves
-    // the head per action), materializes. The happy path skips the
-    // persist: shuffle reuse already makes the repeated window nearly
-    // free (the unconditional persist measured ~1.8x on q219).
-    val plan = changes.queryExecution.analyzed
-    val hasNonDet =
-      plan.exists(_.expressions.exists(_.exists(e => !e.deterministic)))
-    val stableLeaves = plan.collectLeaves().forall {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case _: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            true
-          case r: graft.sources.VersionedRelation => r.version.isDefined
-          case _ => false
-        }
-      case _ => false
-    }
-    val needsMat = hasNonDet || !stableLeaves
-    val winners0 = changes
-      .withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1).drop("__graft_rn")
-    // r19: materialize the winner set (and below, the stale-guard
-    // survivors) ONCE. Separate actions reuse no shuffle, so the r18
-    // shuffle-reuse assumption did not hold across the four consumers —
-    // each re-ran the whole batch window AND re-paid Catalyst/AQE
+    // and both op splits — FOUR consumers of one frame. Materialize it
+    // (and below, the stale-guard survivors) ONCE, the Delta merge
+    // materializeSource rule: re-evaluated, keys could appear OUTSIDE
+    // the bounds the first pass captured, their target files prune
+    // away, their current rows go unseen, and a STALE change slips the
+    // guard. Separate actions reuse no shuffle either, so each consumer
+    // would re-run the whole batch window AND re-pay Catalyst/AQE
     // planning of the full dataflow (70-400 ms per execution, ProfileQ
     // q219/q220). With winners and fresh truncated to LogicalRDDs, the
     // downstream merge sees already-materialized narrow frames and
-    // skips its own source materialization (alreadyTruncated). Also
-    // strictly stronger than the old needsMat rule: rows are FIXED
-    // across every pass regardless of leaf stability. Kill switch
-    // spark.graft.apply.materialize reverts to the r18 path.
-    val applyMat =
-      spark.conf.get("spark.graft.apply.materialize", "true").toBoolean
-    val (winners, releaseW) =
-      if (applyMat) org.apache.spark.sql.graftbridge.Bridge
-        .materializeReleasable(spark, winners0)
-      else (if (needsMat) winners0.persist() else winners0, () => ())
+    // skips its own source materialization (alreadyTruncated).
+    val (winners, releaseW) = Bridge.materializeReleasable(spark, changes
+      .withColumn("__graft_rn", row_number().over(w))
+      .filter(col("__graft_rn") === 1).drop("__graft_rn"))
     try {
       // 2. stale-guard against the CURRENT row, reading only the pruned
       // key range; NULL target seq (new key, or pre-seq file) admits
@@ -5723,10 +5682,7 @@ object VersionedTable {
         .filter(col("__graft_cur_seq").isNull ||
           col(seqCol) > col("__graft_cur_seq"))
         .drop("__graft_cur_seq")
-      val (fresh, releaseF) =
-        if (applyMat) org.apache.spark.sql.graftbridge.Bridge
-          .materializeReleasable(spark, fresh0)
-        else (fresh0, () => ())
+      val (fresh, releaseF) = Bridge.materializeReleasable(spark, fresh0)
       try {
         // 3. split ops and land as ONE merge-on-read commit
         val (ups, dels) = deleteCol match {
@@ -5741,7 +5697,7 @@ object VersionedTable {
         mergeIntoVectored(spark, root, ordered, keys, deletes0 = dels,
           txn = txn)
       } finally releaseF()
-    } finally { if (!applyMat && needsMat) winners.unpersist(); releaseW() }
+    } finally releaseW()
   }
 
   /** MERGE with SCHEMA EVOLUTION (the Delta `withSchemaEvolution`
@@ -5865,7 +5821,7 @@ object VersionedTable {
     if (remsEmpty || addsEmpty)
       (if (remsEmpty) adds else adds.exceptAll(rems),
        if (addsEmpty) rems else rems.exceptAll(adds))
-    else twoWayDiff(spark, adds, rems)
+    else twoWayDiff(adds, rems)
   }
 
   /** The raw diff sides for `(fromV, toV]` plus their metadata-provable
@@ -5986,37 +5942,21 @@ object VersionedTable {
     * the two `exceptAll` outputs tagged and unioned, the d = 0
     * identical-image cancellation bucket (the compaction contract)
     * included. One-sided commits (pure appends, first deletes) keep the
-    * r18 aggregation-free fast path. Kill switch:
-    * spark.graft.cdf.fusedChangelog. */
+    * r18 aggregation-free fast path. */
   private[graft] def changelogBetween(spark: SparkSession, root: String,
                                       fromV: Int, toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, sum => fsum, when,
-      abs => fabs, explode, array_repeat}
+    import org.apache.spark.sql.functions.{col, lit, when, abs => fabs}
     val (adds, rems, addsEmpty, remsEmpty) = diffSides(spark, root, fromV, toV)
-    def tagged(a: DataFrame, r: DataFrame): DataFrame =
-      a.withColumn("_change_type", lit("insert"))
-        .unionByName(r.withColumn("_change_type", lit("delete")))
     if (remsEmpty || addsEmpty)
-      tagged(if (remsEmpty) adds else adds.exceptAll(rems),
-             if (addsEmpty) rems else rems.exceptAll(adds))
-    else if (!spark.conf.get("spark.graft.cdf.fusedChangelog", "true").toBoolean) {
-      val (a, r) = twoWayDiff(spark, adds, rems)
-      tagged(a, r)
-    } else {
-      val cols = adds.columns.toSeq
-      val Side = "__graft_diff_sign"
-      val Delta = "__graft_diff_d"
-      val Rep = "__graft_diff_rep"
-      val agg = adds.withColumn(Side, lit(1L))
-        .unionByName(rems.withColumn(Side, lit(-1L)))
-        .groupBy(cols.map(col): _*)
-        .agg(fsum(col(Side)).cast("int").as(Delta))
-      agg.filter(col(Delta) =!= 0)
-        .select(cols.map(col) ++ Seq(
-          when(col(Delta) > 0, lit("insert")).otherwise(lit("delete"))
-            .as("_change_type"),
-          explode(array_repeat(lit(true), fabs(col(Delta)))).as(Rep)): _*)
-        .drop(Rep)
+      (if (remsEmpty) adds else adds.exceptAll(rems))
+        .withColumn("_change_type", lit("insert"))
+        .unionByName((if (addsEmpty) rems else rems.exceptAll(adds))
+          .withColumn("_change_type", lit("delete")))
+    else {
+      val d = col(DiffDelta)
+      replicated(signedDelta(adds, rems).filter(d =!= 0), fabs(d),
+        adds.columns.toSeq.map(col) :+
+          when(d > 0, lit("insert")).otherwise(lit("delete")).as("_change_type"))
     }
   }
 
@@ -6036,29 +5976,38 @@ object VersionedTable {
     * Spark's own rewrite, including its NULL/NaN grouping semantics
     * (both sides aggregate rows the same way). Identical-image
     * cancellation (the compaction contract) is the d = 0 bucket, which
-    * neither side emits. Kill switch: spark.graft.cdf.onepassDiff. */
-  private def twoWayDiff(spark: SparkSession, adds: DataFrame,
-                         rems: DataFrame): (DataFrame, DataFrame) = {
-    if (!spark.conf.get("spark.graft.cdf.onepassDiff", "true").toBoolean)
-      return (adds.exceptAll(rems), rems.exceptAll(adds))
-    import org.apache.spark.sql.functions.{col, lit, sum => fsum, explode,
-      array_repeat}
-    val cols = adds.columns.toSeq
-    val Side = "__graft_diff_sign"
-    val Delta = "__graft_diff_d"
-    val Rep = "__graft_diff_rep"
-    val agg = adds.withColumn(Side, lit(1L))
-      .unionByName(rems.withColumn(Side, lit(-1L)))
-      .groupBy(cols.map(col): _*)
-      .agg(fsum(col(Side)).as(Delta))
+    * neither side emits. */
+  private def twoWayDiff(adds: DataFrame, rems: DataFrame)
+      : (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    val agg = signedDelta(adds, rems)
     def emit(sign: Int): DataFrame = {
-      val d = (col(Delta) * sign).cast("int")
-      agg.filter(d > 0)
-        .select(cols.map(col) :+
-          explode(array_repeat(lit(true), d)).as(Rep): _*)
-        .drop(Rep)
+      val d = col(DiffDelta) * sign
+      replicated(agg.filter(d > 0), d, adds.columns.toSeq.map(col))
     }
     (emit(1), emit(-1))
+  }
+
+  private val DiffDelta = "__graft_diff_d"
+
+  /** The ONE signed aggregate behind both mixed-commit diffs: per
+    * distinct row image r of `adds ∪ rems`, its columns plus
+    * [[DiffDelta]] = #adds(r) − #rems(r) as an int. */
+  private def signedDelta(adds: DataFrame, rems: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, sum => fsum}
+    val Side = "__graft_diff_sign"
+    adds.withColumn(Side, lit(1L))
+      .unionByName(rems.withColumn(Side, lit(-1L)))
+      .groupBy(adds.columns.toSeq.map(col): _*)
+      .agg(fsum(col(Side)).cast("int").as(DiffDelta))
+  }
+
+  /** `n` (> 0) copies of each row of `df`, projected to `out`. */
+  private def replicated(df: DataFrame, n: org.apache.spark.sql.Column,
+                         out: Seq[org.apache.spark.sql.Column]): DataFrame = {
+    import org.apache.spark.sql.functions.{lit, explode, array_repeat}
+    val Rep = "__graft_diff_rep"
+    df.select(out :+ explode(array_repeat(lit(true), n)).as(Rep): _*).drop(Rep)
   }
 
   /** Follow the commit log as a STREAM: the versioned table is its own
@@ -6139,8 +6088,8 @@ object VersionedTable {
 
   /** Compaction as a commit: rewrite the newest version into
     * ceil(bytes/targetBytes) files and publish as a new version. Readers
-    * of any resolved version are untouched — this is the catalog-swap
-    * answer to [[Writers.compact]]'s rename-aside caveat. No-op (returns
+    * of any resolved version are untouched — no rename-aside directory
+    * swap, so no window without a table. No-op (returns
     * current version) when already at or below the target count. */
   def compact(spark: SparkSession, root: String,
               targetBytes: Long = 128L * 1024 * 1024,

@@ -51,21 +51,6 @@ object Writers {
     (df.filter(valid),
      df.filter(!valid).withColumn("reject_reason", lit(reason)))
 
-  /** Skew-resistant equi-join (SURVEY.md §4 / the brief's "salting for
-    * skew"): the large side is salted deterministically from its row hash,
-    * the small side replicated saltN ways, and the join key becomes
-    * (key, salt) — a hot key's rows spread over saltN reducers. Result is
-    * row-identical to the plain join. AQE's skew-join handles the same
-    * case adaptively; explicit salting is for static plans / writers. */
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-                 saltN: Int): DataFrame = {
-    val salted = large.withColumn("_salt",
-      pmod(hash(large.columns.map(col).toSeq: _*), lit(saltN)))
-    val replicated = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltN - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
-
   /** K1/K2 tile-table write: zstd parquet, laid out for scan locality —
     * partition by scene prefix would explode small dirs at low SF, so we
     * sort within partitions by the grid key instead (parquet row-group
@@ -96,62 +81,6 @@ object Writers {
       else VersionedTable.overwrite(spark, root, sorted)
     writeMetadataSidecar(spark, VersionedTable.read(spark, root, Some(v)), root)
     v
-  }
-
-  /** Small-file compaction — the table-maintenance job every streaming /
-    * incremental sink needs at scale: micro-batch appends and per-bucket
-    * overwrites accrete small part files until scan task overhead
-    * dominates. Rewrites the table into ceil(bytes / targetBytes) files
-    * (no-op when already at or below that), preserving any
-    * `_table_metadata.json` sidecar. Data is byte-identical (same rows);
-    * only the file layout changes. Returns (filesBefore, filesAfter). */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(hPath)
-      .filter(f => f.getPath.getName.startsWith("part-"))
-    val totalBytes = parts.map(_.getLen).sum
-    val target = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (target >= parts.length) return (parts.length, parts.length)
-    val sidecar = new org.apache.hadoop.fs.Path(path, "_table_metadata.json")
-    val sidecarBytes =
-      if (fs.exists(sidecar)) {
-        val in = fs.open(sidecar)
-        try Some(org.apache.commons.io.IOUtils.toByteArray(in)) finally in.close()
-      } else None
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact.bak")
-    try {
-      spark.read.parquet(path)
-        .repartition(target)
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .parquet(tmp.toString)
-    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    // swap via rename-aside: the live table is never deleted before its
-    // replacement is in place — a crash mid-swap leaves either the
-    // original (possibly under the .bak name) or the new table on disk.
-    // Caveats (acceptable for this single-JVM harness, by design): between
-    // rename(hPath,bak) and rename(tmp,hPath) the live path does not
-    // exist, so a concurrent reader in the same session can fail, and a
-    // crash in that window strands the table under .bak — recovery is a
-    // manual rename back. A multi-writer deployment would use a
-    // catalog-pointer swap (table format metadata) instead of renames.
-    fs.delete(bak, true)
-    fs.rename(hPath, bak)
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // restore the original, then report
-      throw new java.io.IOException(s"compact: rename $tmp -> $hPath failed; original restored")
-    }
-    fs.delete(bak, true)
-    sidecarBytes.foreach { bs =>
-      val out = fs.create(sidecar, true)
-      try out.write(bs) finally out.close()
-    }
-    val after = fs.listStatus(hPath)
-      .count(f => f.getPath.getName.startsWith("part-"))
-    (parts.length, after)
   }
 
   /** K8: the parquet analog of the reference's AddRasterConstraints step

@@ -286,10 +286,14 @@ object GeoTiff {
     * "early change" (code width grows when the NEXT table slot is
     * (1<<width)-1 — one entry earlier than plain LZW; TIFF 6.0 §13). */
   private[graft] def lzwDecode(data: Array[Byte], outLen: Int): Array[Byte] =
-    lzwDecode(data, 0, data.length, outLen)
+    lzwDecode(data, 0, data.length, outLen, tile = 0)
 
-  /** [[lzwDecode]] over `data(off until off + len)`. */
-  private def lzwDecode(data: Array[Byte], off: Int, len: Int, outLen: Int): Array[Byte] = {
+  /** [[lzwDecode]] over `data(off until off + len)`. A code the table
+    * does not hold yet (one past its next entry, or a code above 257
+    * opening a segment) and a stream that ends short are a
+    * [[DecodeException]] naming `tile`. */
+  private def lzwDecode(data: Array[Byte], off: Int, len: Int, outLen: Int,
+                        tile: Int): Array[Byte] = {
     val end = off + len
     val out = new Array[Byte](outLen)
     var outOff = 0
@@ -312,10 +316,13 @@ object GeoTiff {
       if (code == LzwClear) {
         next = 258; width = 9; old = -1
       } else {
+        // right after a Clear next is 258, so a code above 257 fails
+        // here instead of reading an entry from before the Clear
         val entry =
-          if (old < 0) table(code)
-          else if (code < next && table(code) != null) table(code)
-          else table(old) :+ table(old)(0) // KwKwK case
+          if (code < next) table(code)
+          else if (code == next && old >= 0) table(old) :+ table(old)(0) // KwKwK case
+          else throw new DecodeException(
+            s"Corrupt LZW tile $tile: code $code but the table holds $next entries")
         System.arraycopy(entry, 0, out, outOff, math.min(entry.length, outLen - outOff))
         outOff += entry.length
         if (old >= 0 && next < 4096) {
@@ -330,7 +337,8 @@ object GeoTiff {
       }
       code = read()
     }
-    require(outOff >= outLen, s"Truncated LZW segment: $outOff of $outLen bytes")
+    if (outOff < outLen)
+      throw new DecodeException(s"Truncated LZW tile $tile: $outOff of $outLen bytes")
     out
   }
 
@@ -555,7 +563,7 @@ object GeoTiff {
       // (raw, base): the decoded samples and where they start in `raw`
       val (raw, base) = info.compression match {
         case 8 => (inflate(bytes, off.toInt, len.toInt, rawLen, ti), 0)
-        case 5 => (lzwDecode(bytes, off.toInt, len.toInt, rawLen), 0)
+        case 5 => (lzwDecode(bytes, off.toInt, len.toInt, rawLen, ti), 0)
         case _ =>
           if (len < rawLen)
             throw new DecodeException(s"Tile $ti holds $len of $rawLen bytes")

@@ -83,10 +83,10 @@ class ApplyChangesSpec extends SparkSpec {
     val root = freshRoot()
     VersionedTable.create(spark, root,
       Seq((1L, 10L, "a")).toDF("k", "seq", "v").coalesce(1))
-    // rand() in the frame forces the materialize-source path: the
-    // bounds, the stale-guard join and the splits must all see ONE
-    // evaluation — keys/seqs here are deterministic, so the fold's
-    // outcome is checkable even though v is not
+    // rand() makes every evaluation of the frame differ: the bounds,
+    // the stale-guard join and the splits must all see the ONE
+    // materialized evaluation — keys/seqs here are deterministic, so
+    // the fold's outcome is checkable even though v is not
     val chg = Seq(1L -> 20L, 2L -> 5L).toDF("k", "seq")
       .withColumn("v", concat(lit("r"), (rand(7) * 1000).cast("int")))
     VersionedTable.applyChanges(spark, root, chg.coalesce(1), Seq("k"), "seq")

@@ -254,6 +254,37 @@ class GeoTiffSpec extends SparkSpec {
     assert(e.getMessage == "Deflate tile 1 needs a preset dictionary")
   }
 
+  test("a corrupt LZW tile fails with a decode error naming the tile: an unknown " +
+    "code opening a segment, a stale code after a Clear, a code past the table, truncation") {
+    val good = GeoTiff.writeTiled(data, w, h, 32635, tf, Some(0.0), ts, compression = 5)
+    val info = GeoTiff.readInfo(good)
+    // 9-bit codes packed MSB-first; no stream below grows the table far
+    // enough to widen the code
+    def stream(codes: Int*): Array[Byte] = {
+      val bits = codes.map(c => f"${c.toBinaryString}%9s".replace(' ', '0')).mkString
+      bits.padTo((bits.length + 7) / 8 * 8, '0').grouped(8)
+        .map(b => Integer.parseInt(b, 2).toByte).toArray
+    }
+    // tile 1's payload replaced in place; EOI (257) ends each stream
+    // before the original bytes that follow it
+    def decodeError(codes: Int*): String = {
+      val payload = stream(codes: _*)
+      assert(payload.length <= info.tileByteCounts(1))
+      val bad = good.clone()
+      System.arraycopy(payload, 0, bad, info.tileOffsets(1).toInt, payload.length)
+      intercept[GeoTiff.DecodeException](GeoTiff.toBandTiles("S", "red", bad)).getMessage
+    }
+    // first code of the stream names an entry no code has defined
+    assert(decodeError(300, 257) == "Corrupt LZW tile 1: code 300 but the table holds 258 entries")
+    // 258 = "AB" before the Clear; after it, 258 is undefined again
+    assert(decodeError(65, 66, 67, 256, 258, 257) ==
+      "Corrupt LZW tile 1: code 258 but the table holds 258 entries")
+    // after "A", "B" the table holds 0-258; only 259 (KwKwK) may follow
+    assert(decodeError(65, 66, 300, 257) ==
+      "Corrupt LZW tile 1: code 300 but the table holds 259 entries")
+    assert(decodeError(256, 65, 257) == s"Truncated LZW tile 1: 1 of ${ts * ts * 2} bytes")
+  }
+
   test("reader rejects non-TIFF and unsupported layouts") {
     intercept[IllegalArgumentException] {
       GeoTiff.readInfo("not a tiff at all".getBytes)

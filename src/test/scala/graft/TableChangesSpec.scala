@@ -19,6 +19,25 @@ class TableChangesSpec extends SparkSpec {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_tc").resolve("t").toString
 
+  /** Count each row image of a collected side. */
+  private def multiset[R](rows: Seq[R]): Map[R, Int] =
+    rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  /** The reference change set of (from, to]: collect both snapshots and
+    * count every (id, amt) image on each side; a positive count
+    * difference is that many inserts, a negative one that many deletes.
+    * Returns (inserts, deletes) as multisets. */
+  private def naiveDiff(root: String, from: Int, to: Int)
+      : (Map[(Long, Double), Int], Map[(Long, Double), Int]) = {
+    def snap(v: Int) = multiset(VersionedTable.read(spark, root, Some(v))
+      .select("id", "amt").as[(Long, Double)].collect().toSeq)
+    val (old, cur) = (snap(from), snap(to))
+    val d = (old.keySet ++ cur.keySet).toSeq
+      .map(r => r -> (cur.getOrElse(r, 0) - old.getOrElse(r, 0)))
+    (d.collect { case (r, n) if n > 0 => r -> n }.toMap,
+     d.collect { case (r, n) if n < 0 => r -> -n }.toMap)
+  }
+
   test("one-pass two-way diff: append ranges plan no aggregate; mixed commits match the exceptAll relation") {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     val root = freshRoot()
@@ -30,37 +49,31 @@ class TableChangesSpec extends SparkSpec {
     // mixed commit (files removed + added)
     VersionedTable.mergeInto(spark, root,
       Seq((2L, 99.0), (4L, 40.0)).toDF("id", "amt"), Seq("id"))      // v3
+    def diff(from: Int, to: Int) = {
+      val (a, r) = VersionedTable.changesBetween(spark, root, from, to)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        multiset(df.select("id", "amt").as[(Long, Double)].collect().toSeq)
+      (a, r, rows(a), rows(r))
+    }
     // append-only range (1,2]: the one-sided fast path must skip the
     // diff aggregation outright — no Aggregate anywhere in either plan
-    val (a2, r2) = VersionedTable.changesBetween(spark, root, 1, 2)
+    val (a2, _, a2Rows, r2Rows) = diff(1, 2)
     assert(!a2.queryExecution.optimizedPlan.exists(_.isInstanceOf[Aggregate]),
       s"append-only adds must not aggregate:\n${a2.queryExecution.optimizedPlan}")
-    assert(r2.collect().isEmpty)
+    assert(r2Rows.isEmpty)
+    assert((a2Rows, r2Rows) == naiveDiff(root, 1, 2))
     // mixed range (2,3]: the one-pass diff must produce exactly the
-    // exceptAll relation (kill-switch comparison in ONE session), with
-    // the carried duplicate row's images cancelling
-    def both(flag: String): (Set[(Long, Double)], Set[(Long, Double)]) = {
-      spark.conf.set("spark.graft.cdf.onepassDiff", flag)
-      try {
-        val (a, r) = VersionedTable.changesBetween(spark, root, 2, 3)
-        (a.select("id", "amt").as[(Long, Double)].collect().toSet,
-         r.select("id", "amt").as[(Long, Double)].collect().toSet)
-      } finally spark.conf.unset("spark.graft.cdf.onepassDiff")
-    }
-    val (aNew, rNew) = both("true")
-    val (aOld, rOld) = both("false")
-    assert(aNew == aOld && rNew == rOld,
-      s"one-pass diff diverged: $aNew/$rNew vs $aOld/$rOld")
-    assert(aNew == Set((2L, 99.0), (4L, 40.0)) &&
-      rNew == Set((2L, 20.0)),
+    // multiset difference of the two snapshots, with the carried
+    // duplicate row's images cancelling
+    val (_, _, aNew, rNew) = diff(2, 3)
+    assert((aNew, rNew) == naiveDiff(root, 2, 3),
+      s"one-pass diff diverged from the snapshot diff: $aNew/$rNew vs ${naiveDiff(root, 2, 3)}")
+    assert(aNew.keySet == Set((2L, 99.0), (4L, 40.0)) &&
+      rNew.keySet == Set((2L, 20.0)),
       s"v3 diff wrong: adds=$aNew rems=$rNew")
     // multiset multiplicity: the duplicate (2,20) pair both vanished —
     // removed side must carry BOTH copies
-    spark.conf.set("spark.graft.cdf.onepassDiff", "true")
-    try {
-      val (_, r3) = VersionedTable.changesBetween(spark, root, 2, 3)
-      assert(r3.collect().length == 2, "both copies of the dup row removed")
-    } finally spark.conf.unset("spark.graft.cdf.onepassDiff")
+    assert(rNew.values.sum == 2, "both copies of the dup row removed")
   }
 
   test("fused changelog: one aggregate on mixed commits, relation matches the per-side union") {
@@ -74,33 +87,28 @@ class TableChangesSpec extends SparkSpec {
     // 4L inserted: a mixed commit through the diff aggregation
     VersionedTable.mergeInto(spark, root,
       Seq((2L, 99.0), (5L, 0.0), (4L, 40.0)).toDF("id", "amt"), Seq("id"))
-    def feed(flag: String): Seq[(Long, Double, String)] = {
-      spark.conf.set("spark.graft.cdf.fusedChangelog", flag)
-      try spark.read.format("graft-versioned")
-        .option("readChangeFeed", "true")
-        .option("startingVersion", "2").load(root)
-        .select("id", "amt", "_change_type")
-        .as[(Long, Double, String)].collect().toSeq.sorted
-      finally spark.conf.unset("spark.graft.cdf.fusedChangelog")
+    val fused = spark.read.format("graft-versioned")
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "2").load(root)
+      .select("id", "amt", "_change_type")
+      .as[(Long, Double, String)].collect().toSeq.sorted
+    // the reference: each side of the snapshot diff, tagged and unioned
+    val unioned = {
+      val (ins, del) = naiveDiff(root, 1, 2)
+      def tagged(side: Map[(Long, Double), Int], tag: String) =
+        side.toSeq.flatMap { case ((id, amt), n) => Seq.fill(n)((id, amt, tag)) }
+      (tagged(ins, "insert") ++ tagged(del, "delete")).sorted
     }
-    val fused = feed("true")
-    val unioned = feed("false")
     assert(fused == unioned, s"fused changelog diverged: $fused vs $unioned")
     // multiset multiplicity AND identical-image cancellation: both dup
     // copies of 2L surface as deletes, the no-op 5L rewrite is invisible
     assert(fused == Seq((2L, 20.0, "delete"), (2L, 20.0, "delete"),
       (2L, 99.0, "insert"), (4L, 40.0, "insert")).sorted,
       s"v2 changelog wrong: $fused")
-    // plan shape: the fused frame carries exactly ONE diff aggregate —
-    // the per-side union shape carried two (one per exceptAll rewrite)
-    def nAggs(flag: String): Int = {
-      spark.conf.set("spark.graft.cdf.fusedChangelog", flag)
-      try VersionedTable.changelogBetween(spark, root, 1, 2)
-        .queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
-      finally spark.conf.unset("spark.graft.cdf.fusedChangelog")
-    }
-    assert(nAggs("true") == 1, "fused changelog must plan exactly one aggregate")
-    assert(nAggs("false") == 2, "per-side union plans one aggregate per side")
+    // plan shape: the fused frame carries exactly ONE diff aggregate
+    val nAggs = VersionedTable.changelogBetween(spark, root, 1, 2)
+      .queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
+    assert(nAggs == 1, "fused changelog must plan exactly one aggregate")
   }
 
   test("batch feed: exact per-version stamps; renames align to the ending schema") {

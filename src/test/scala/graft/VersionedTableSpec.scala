@@ -355,18 +355,47 @@ class VersionedTableSpec extends SparkSpec {
     val root = freshRoot()
     VersionedTable.create(spark, root, df(1L to 10L: _*).coalesce(1))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    VersionedTable.mergeInto(spark, root,
+    def releases(what: String)(merge: => Unit): Unit = {
+      merge
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty,
+        s"$what left persisted RDD(s) behind: ids $leaked")
+    }
+    def payloads = VersionedTable.read(spark, root).select("id", "payload")
+      .as[(Long, Long)].collect().toMap
+    releases("mergeInto")(VersionedTable.mergeInto(spark, root,
       Seq(5L).toDF("id").withColumn("payload", col("id") * 1000),
-      Seq("id"), Some(Seq(7L).toDF("id")))
-    VersionedTable.mergeIntoVectored(spark, root,
+      Seq("id"), Some(Seq(7L).toDF("id"))))
+    releases("mergeIntoVectored")(VersionedTable.mergeIntoVectored(spark, root,
       Seq(6L).toDF("id").withColumn("payload", col("id") * 1000),
-      Seq("id"), Some(Seq(8L).toDF("id")))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"merge left persisted RDD(s) behind: ids $leaked")
+      Seq("id"), Some(Seq(8L).toDF("id"))))
     // and the merges themselves landed (release happens AFTER the commit)
     assert(idsOf(VersionedTable.read(spark, root)) ==
       ((1L to 6L) ++ Seq(9L, 10L)))
+    // applyChanges over local rows materializes its winner set too
+    // (payload is the sequence column: 2000 > 20 wins, 10 < 30 is stale)
+    releases("applyChanges")(VersionedTable.applyChanges(spark, root,
+      Seq(2L -> 2000L, 3L -> 10L).toDF("id", "payload"), Seq("id"), "payload"))
+    assert(payloads(2L) == 2000L && payloads(3L) == 30L)
+    // the WHEN grammar, copy-on-write and then merge-on-read, over a
+    // table of NULLABLE columns: the grammar's built rows are nullable,
+    // so a NOT NULL target refuses them (see MergeWhenSpec's seed)
+    val rootW = freshRoot()
+    VersionedTable.create(spark, rootW, df(1L to 4L: _*)
+      .select(Seq("id", "payload").map(c => when(col(c).isNotNull, col(c)).as(c)): _*)
+      .coalesce(1))
+    Seq(false -> 4000L, true -> 4001L).foreach { case (vectored, p) =>
+      releases(s"mergeIntoWhenFull(vectored = $vectored)")(
+        VersionedTable.mergeIntoWhenFull(spark, rootW,
+          Seq(4L -> p).toDF("id", "payload"), Seq("id"),
+          matched = Seq((None: Option[org.apache.spark.sql.Column]) ->
+            (VersionedTable.MatchedUpdate(Map("payload" -> col("s.payload")))
+              : VersionedTable.MatchedAction)),
+          notMatched = Seq.empty, vectored = vectored))
+      assert(VersionedTable.read(spark, rootW).select("id", "payload")
+        .as[(Long, Long)].collect().toMap ==
+        Map(1L -> 10L, 2L -> 20L, 3L -> 30L, 4L -> p), s"vectored = $vectored")
+    }
   }
 
   test("changesBetween diffs only the rewritten files; compaction reports no changes") {

@@ -8,8 +8,8 @@ import graft.model.RasterModel
 import graft.raster.NdviKernel
 import graft.sink.Writers
 
-/** Writer-side scale mechanics: tile round trip, salted join equivalence,
-  * and date-partitioned layout with partition pruning at the scan. */
+/** Writer-side scale mechanics: tile round trip, the K8 sidecar, and
+  * date-partitioned layout with partition pruning at the scan. */
 class WritersSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,41 +93,6 @@ class WritersSpec extends SparkSpec {
     val meta2 = spark.read.json(Seq(new String(Files.readAllBytes(
       java.nio.file.Paths.get(root, "_table_metadata.json")), "UTF-8")).toDS()).head
     assert(meta2.getAs[Long]("n_tiles") == 1L)
-  }
-
-  test("saltedJoin equals the plain join row-for-row") {
-    val large = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-    val small = Tables.orders(spark, sf).select("o_orderkey", "o_orderstatus")
-      .withColumnRenamed("o_orderkey", "l_orderkey")
-    val plain = large.join(small, "l_orderkey")
-      .as[(Long, Double, String)].collect().sorted
-    val salted = Writers.saltedJoin(large, small, "l_orderkey", saltN = 8)
-      .select("l_orderkey", "l_quantity", "o_orderstatus")
-      .as[(Long, Double, String)].collect().sorted
-    assert(salted.toSeq == plain.toSeq)
-  }
-
-  test("compact rewrites many small files into few, preserving rows and sidecar") {
-    val path = Files.createTempDirectory("compact").resolve("t").toString
-    val df = Tables.orders(spark, sf).repartition(16)
-    df.write.parquet(path)
-    // give it a sidecar to preserve
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sc = new org.apache.hadoop.fs.Path(path, "_table_metadata.json")
-    val o = fs.create(sc, true); o.write("{\"n\": 1}".getBytes); o.close()
-    val before = spark.read.parquet(path)
-      .orderBy("o_orderkey").collect()
-    val (nBefore, nAfter) = Writers.compact(spark, path, targetBytes = 512L * 1024 * 1024)
-    assert(nBefore == 16 && nAfter < nBefore,
-      s"expected compaction from 16 files, got $nBefore -> $nAfter")
-    val after = spark.read.parquet(path).orderBy("o_orderkey").collect()
-    assert(after.length == before.length)
-    assert(after.map(_.getLong(0)).toSeq == before.map(_.getLong(0)).toSeq)
-    assert(fs.exists(sc), "sidecar must survive compaction")
-    // idempotent: already compact → no-op
-    val (b2, a2) = Writers.compact(spark, path, targetBytes = 512L * 1024 * 1024)
-    assert(b2 == a2 && b2 == nAfter)
   }
 
   test("date-partitioned write prunes partitions at the scan") {
