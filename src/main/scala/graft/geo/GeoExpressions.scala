@@ -15,8 +15,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * so a constant AOI parses once per task, not once per row.
   *
   * CodegenFallback is acceptable here: the expression sits behind the
-  * envelope-overlap pre-filter (the hot path prunes tiles by bbox with
-  * codegen'd comparisons; exact PIP runs only on boundary tiles).
+  * envelope-overlap pre-filter (the EnvelopePrefilter rule prunes by bbox
+  * with codegen'd comparisons). The raster clip does not call it per
+  * pixel: [[graft.raster.ClipMaskExpr]] masks whole tiles, equal to it at
+  * every pixel centre.
   */
 case class PointInPolygon(wktExpr: Expression, xExpr: Expression, yExpr: Expression,
                           envApplied: Boolean = false)

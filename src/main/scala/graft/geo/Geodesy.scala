@@ -55,7 +55,17 @@ object Geodesy {
 
   /** Geographic → UTM (zone given). Returns (easting, northing). */
   def utmForward(lonDeg: Double, latDeg: Double, zone: Int,
-                 north: Boolean): (Double, Double) = {
+                 north: Boolean): (Double, Double) = pair(utmForward(lonDeg, latDeg, zone, north, _))
+
+  /** The point-transform bodies write (x, y) into `out` instead of
+    * returning a tuple, so the warp's per-pixel loop allocates nothing; the
+    * tuple forms above and below wrap them. */
+  private def pair(f: Array[Double] => Unit): (Double, Double) = {
+    val out = new Array[Double](2); f(out); (out(0), out(1))
+  }
+
+  private def utmForward(lonDeg: Double, latDeg: Double, zone: Int, north: Boolean,
+                         out: Array[Double]): Unit = {
     val lat = math.toRadians(latDeg)
     val lon0 = math.toRadians(zone * 6.0 - 183.0)
     val dLon = math.toRadians(lonDeg) - lon0
@@ -73,14 +83,16 @@ object Geodesy {
       eta += alpha(j - 1) * math.cos(2 * j * xiP) * math.sinh(2 * j * etaP)
       j += 1
     }
-    val e2 = FalseEasting + K0 * Acap * eta
-    val n2_ = (if (north) 0.0 else FalseNorthingSouth) + K0 * Acap * xi
-    (e2, n2_)
+    out(0) = FalseEasting + K0 * Acap * eta
+    out(1) = (if (north) 0.0 else FalseNorthingSouth) + K0 * Acap * xi
   }
 
   /** UTM → geographic. Returns (lon, lat) degrees. */
   def utmInverse(easting: Double, northing: Double, zone: Int,
-                 north: Boolean): (Double, Double) = {
+                 north: Boolean): (Double, Double) = pair(utmInverse(easting, northing, zone, north, _))
+
+  private def utmInverse(easting: Double, northing: Double, zone: Int, north: Boolean,
+                         out: Array[Double]): Unit = {
     val xi = (northing - (if (north) 0.0 else FalseNorthingSouth)) / (K0 * Acap)
     val eta = (easting - FalseEasting) / (K0 * Acap)
     var xiP = xi; var etaP = eta
@@ -98,40 +110,51 @@ object Geodesy {
       j += 1
     }
     val lon0 = zone * 6.0 - 183.0
-    val lon = lon0 + math.toDegrees(math.atan2(math.sinh(etaP), math.cos(xiP)))
-    (lon, math.toDegrees(lat))
+    out(0) = lon0 + math.toDegrees(math.atan2(math.sinh(etaP), math.cos(xiP)))
+    out(1) = math.toDegrees(lat)
   }
 
   /** Web Mercator forward (EPSG:4326 → 3857). */
-  def webMercatorForward(lonDeg: Double, latDeg: Double): (Double, Double) = {
-    val x = A * math.toRadians(lonDeg)
-    val y = A * math.log(math.tan(math.Pi / 4.0 + math.toRadians(latDeg) / 2.0))
-    (x, y)
+  def webMercatorForward(lonDeg: Double, latDeg: Double): (Double, Double) =
+    pair(webMercatorForward(lonDeg, latDeg, _))
+
+  private def webMercatorForward(lonDeg: Double, latDeg: Double, out: Array[Double]): Unit = {
+    out(0) = A * math.toRadians(lonDeg)
+    out(1) = A * math.log(math.tan(math.Pi / 4.0 + math.toRadians(latDeg) / 2.0))
   }
 
   /** Web Mercator inverse (EPSG:3857 → 4326). */
-  def webMercatorInverse(x: Double, y: Double): (Double, Double) = {
-    val lon = math.toDegrees(x / A)
-    val lat = math.toDegrees(2.0 * math.atan(math.exp(y / A)) - math.Pi / 2.0)
-    (lon, lat)
+  def webMercatorInverse(x: Double, y: Double): (Double, Double) =
+    pair(webMercatorInverse(x, y, _))
+
+  private def webMercatorInverse(x: Double, y: Double, out: Array[Double]): Unit = {
+    out(0) = math.toDegrees(x / A)
+    out(1) = math.toDegrees(2.0 * math.atan(math.exp(y / A)) - math.Pi / 2.0)
   }
 
   /** Point transform between the EPSG codes this engine supports:
     * 4326, 3857, UTM 326xx/327xx. Input/output in the CRS's native axes. */
-  def transformPoint(x: Double, y: Double, fromEpsg: Int, toEpsg: Int): (Double, Double) = {
-    if (fromEpsg == toEpsg) return (x, y)
-    val (lon, lat) = fromEpsg match {
-      case 4326 => (x, y)
-      case 3857 => webMercatorInverse(x, y)
-      case e if e >= 32601 && e <= 32660 => utmInverse(x, y, e - 32600, north = true)
-      case e if e >= 32701 && e <= 32760 => utmInverse(x, y, e - 32700, north = false)
+  def transformPoint(x: Double, y: Double, fromEpsg: Int, toEpsg: Int): (Double, Double) =
+    pair(transformPoint(x, y, fromEpsg, toEpsg, _))
+
+  /** [[transformPoint]] into `out`: (x, y) in the target CRS. */
+  def transformPoint(x: Double, y: Double, fromEpsg: Int, toEpsg: Int,
+                     out: Array[Double]): Unit = {
+    out(0) = x; out(1) = y
+    if (fromEpsg == toEpsg) return
+    fromEpsg match {
+      case 4326 => ()
+      case 3857 => webMercatorInverse(x, y, out)
+      case e if e >= 32601 && e <= 32660 => utmInverse(x, y, e - 32600, north = true, out)
+      case e if e >= 32701 && e <= 32760 => utmInverse(x, y, e - 32700, north = false, out)
       case e => throw new IllegalArgumentException(s"Unsupported source EPSG: $e")
     }
+    val lon = out(0); val lat = out(1)
     toEpsg match {
-      case 4326 => (lon, lat)
-      case 3857 => webMercatorForward(lon, lat)
-      case e if e >= 32601 && e <= 32660 => utmForward(lon, lat, e - 32600, north = true)
-      case e if e >= 32701 && e <= 32760 => utmForward(lon, lat, e - 32700, north = false)
+      case 4326 => ()
+      case 3857 => webMercatorForward(lon, lat, out)
+      case e if e >= 32601 && e <= 32660 => utmForward(lon, lat, e - 32600, north = true, out)
+      case e if e >= 32701 && e <= 32760 => utmForward(lon, lat, e - 32700, north = false, out)
       case e => throw new IllegalArgumentException(s"Unsupported target EPSG: $e")
     }
   }

@@ -34,15 +34,6 @@ object NdviPipeline {
       .orderBy(col("scene_id")).limit(maxItems) // deterministic L1 bound
       .filter(!col("scene_id").startsWith("LE07"))
 
-  /** Transform stage: tiles of the selected scenes → clipped NDVI tiles +
-    * per-scene mean. Returns (ndviTiles, clippedTiles, meanPerScene). */
-  def transformStage(tiles: DataFrame, aoi: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val ndvi = NdviKernel.computeNdvi(tiles)
-    val clipped = Clip.clipToAoi(ndvi, aoi)
-    val mean = NdviKernel.meanNdviPerScene(clipped)
-    (ndvi, clipped, mean)
-  }
-
   /** Load stage with reference conflict semantics: ndvi_full is
     * insert-if-absent on scene_id (K4), ndvi_clipped merges on
     * (scene_id, aoi_id) (K5). */
@@ -116,13 +107,13 @@ object NdviPipeline {
       settings.download.maxItems)
     val releases = collection.mutable.ArrayBuffer.empty[() => Unit]
     def releaseAll(): Unit = releases.foreach(_())
-    def materialize(df: DataFrame): DataFrame = {
-      val (m, release) = Bridge.materializeReleasable(spark, df)
+    def materialize(df: DataFrame): (DataFrame, Long) = {
+      val (m, n, release) = Bridge.materializeCount(spark, df)
       releases += release
-      m
+      (m, n)
     }
     try {
-      val selectedTiles = materialize(tiles.join(
+      val (selectedTiles, _) = materialize(tiles.join(
         broadcast(selected.select(col("scene_id"))), Seq("scene_id")))
       val ndvi = NdviKernel.computeNdvi(selectedTiles)
       // C4: repair-or-reject invalid AOI geometry at ingest (the reference's
@@ -151,14 +142,14 @@ object NdviPipeline {
           s"${r4(corners.map(_._2).min)}, ${r4(corners.map(_._1).max)}, " +
           s"${r4(corners.map(_._2).max)})")
       } catch { case _: Exception => () }
-      val clippedTiles = materialize(Clip.clipToAoi(ndvi, aoiInTileCrs))
+      val (clippedTiles, nClipped) = materialize(Clip.clipToAoi(ndvi, aoiInTileCrs))
       // the reference raises eagerly when nothing overlaps
-      // (compute_ndvi.py:128-131)
+      // (compute_ndvi.py:128-131); the materialization counted the rows
       val nScenes = selected.count()
-      Clip.requireOverlap(clippedTiles, inputNonEmpty = nScenes > 0)
+      Clip.requireOverlap(nClipped, inputNonEmpty = nScenes > 0)
       // mean per (scene, aoi) — the reference keys ndvi_clipped.mean_ndvi by
       // (full_id, aoi_id); pooling across AOIs would double-count overlap.
-      val mean = materialize(NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id")))
+      val (mean, _) = materialize(NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id")))
       // per-AOI clipped products: the grid key for downstream per-image ops
       // is (scene, aoi), encoded in the warp group key.
       val clippedBands = clippedTiles

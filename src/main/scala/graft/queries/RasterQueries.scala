@@ -104,7 +104,7 @@ object RasterQueries {
              count(col("ndvi")).as("n_valid"))
     }),
 
-    // R1/R2 oracle: nearest-neighbor warp 4326→3857 through the REAL typed
+    // R1/R2 oracle: nearest-neighbor warp 4326→3857 through the REAL
     // warp path (Resample.reprojectTiles → warpGrid → Geodesy), on 4×4
     // synthetic tiles from `nation`. Web-Mercator is closed-form (q44), so
     // DuckDB replays the same corner-bbox / inverse-transform / NN-index
@@ -124,20 +124,16 @@ object RasterQueries {
         }
       val warped = graft.raster.Resample
         .reprojectTiles(s, tiles, 3857, resM = 50000.0, bilinear = false)
-      val acc = aggregate(col("pixels"),
-        struct(lit(0.0).as("sm"), lit(0L).as("c")),
-        (a, p) => struct((a("sm") + coalesce(p.cast("double"), lit(0.0))).as("sm"),
-                         (a("c") + p.isNotNull.cast("long")).as("c")))
       warped.toDF()
         .select(col("scene_id"),
           col("width").cast("long").as("out_w"),
           col("height").cast("long").as("out_h"),
           (round(element_at(col("transform"), 3), 4) + lit(0.0)).as("minx"),
           (round(element_at(col("transform"), 6), 4) + lit(0.0)).as("maxy"),
-          acc.as("acc"))
+          graft.raster.SumCountExpr(col("pixels")).as("acc"))
         .select(col("scene_id"), col("out_w"), col("out_h"),
           col("minx"), col("maxy"),
-          col("acc.c").as("n_valid"), col("acc.sm").as("sum_px"))
+          col("acc.c").as("n_valid"), col("acc.s").as("sum_px"))
     }),
 
     // Multi-AOI × date zonal statistics in ONE pass — q38's clip semi-join
@@ -148,7 +144,7 @@ object RasterQueries {
     // per-(tile × AOI) (sum, count) fold INSIDE the projection, then ONE
     // (aoi_id, date) aggregate exchange — the whole query shuffles once.
     // Per-pair sums are 9 dp DECIMALs so the cross-tile sum is exact and
-    // partition-order-independent. The real-polygon twin (st_contains over
+    // partition-order-independent. The real-polygon twin (ClipMaskExpr over
     // WKT) is Clip.zonalStats, golden-tested in ScalaTest.
     "q153_zonal_stats" -> ((s, d) => {
       val tminx = (col("l_orderkey") % 50).cast("double")

@@ -3,7 +3,7 @@ package graft.raster
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.geo.{Geodesy, Wkt}
-import graft.geo.GeoExpressions.st_contains
+import graft.model.RasterModel.Aoi
 
 /** Spatial clip — the reference's raster×AOI "join"
   * (reference src/transform/compute_ndvi.py:95-160, SURVEY.md §2.4 C1–C6):
@@ -13,8 +13,9 @@ import graft.geo.GeoExpressions.st_contains
   * Scale design: the AOI side is tiny (one-to-few polygons) and is
   * broadcast, so the tile table never shuffles; envelope overlap is a
   * codegen'd comparison that prunes whole tiles (the partition-pruning
-  * analog, SURVEY §4), and the exact PIP expression runs only on the
-  * surviving boundary tiles. "Crop" = wholly-outside tiles dropped by the
+  * analog, SURVEY §4), and the exact mask ([[ClipMaskExpr]]: each pixel
+  * row filled from its sorted even-odd edge crossings) runs only on the
+  * surviving tiles. "Crop" = wholly-outside tiles dropped by the
   * join + outside pixels nulled; extent is data (tile bboxes), not schema.
   */
 object Clip {
@@ -44,23 +45,10 @@ object Clip {
     * Vertex-wise transform, driver-side — the AOI side is dimension-sized.
     * Without this, clipToAoi would compare AOI degrees against tile
     * meters and silently match nothing on projected scenes. */
-  def reprojectAoi(aoi: DataFrame, dstEpsg: Int, srcEpsg: Int = 4326): DataFrame = {
-    if (dstEpsg == srcEpsg) return aoi
-    val spark = aoi.sparkSession
-    import spark.implicits._
-    val rows = aoi.select("aoi_id", "name", "geom_wkt", "minx", "miny", "maxx", "maxy")
-      .as[(Long, String, String, Double, Double, Double, Double)].collect()
-      .map { case (id, name, wkt, _, _, _, _) =>
-        val polys = Wkt.parse(wkt).map { p =>
-          Wkt.Polygon(p.rings.map(_.map { case (x, y) =>
-            Geodesy.transformPoint(x, y, srcEpsg, dstEpsg) }))
-        }
-        val wkt2 = toWkt(polys)
-        val env = Wkt.envelope(polys)
-        graft.model.RasterModel.Aoi(id, name, wkt2, env._1, env._2, env._3, env._4)
-      }
-    spark.createDataFrame(rows.toSeq)
-  }
+  def reprojectAoi(aoi: DataFrame, dstEpsg: Int, srcEpsg: Int = 4326): DataFrame =
+    if (dstEpsg == srcEpsg) aoi
+    else mapAoi(aoi)(polys => Some(polys.map(p => Wkt.Polygon(p.rings.map(_.map {
+      case (x, y) => Geodesy.transformPoint(x, y, srcEpsg, dstEpsg) })))))
 
   /** C4: validate-and-repair the AOI table's geometry at ingest (the
     * reference's union + buffer(0) + TopologicalError fallback,
@@ -68,19 +56,20 @@ object Clip {
     * self-intersecting ring (bow-tie) is node-split into its simple
     * sub-rings (same even-odd region); irreparably empty geometry throws.
     * Driver-side like [[reprojectAoi]] — the AOI side is dimension-sized. */
-  def validateAoi(aoi: DataFrame): DataFrame = {
+  def validateAoi(aoi: DataFrame): DataFrame =
+    mapAoi(aoi)(polys => if (Wkt.isValid(polys)) None else Some(Wkt.repair(polys)))
+
+  /** Rewrite each AOI row's geometry on the driver: `f` maps the parsed
+    * polygons to new ones (WKT and envelope recomputed), or None to keep
+    * the row as it is. */
+  private def mapAoi(aoi: DataFrame)(f: Seq[Wkt.Polygon] => Option[Seq[Wkt.Polygon]]): DataFrame = {
     val spark = aoi.sparkSession
     import spark.implicits._
     val rows = aoi.select("aoi_id", "name", "geom_wkt", "minx", "miny", "maxx", "maxy")
-      .as[(Long, String, String, Double, Double, Double, Double)].collect()
-      .map { case (id, name, wkt, mnx, mny, mxx, mxy) =>
-        val polys = Wkt.parse(wkt)
-        if (Wkt.isValid(polys))
-          graft.model.RasterModel.Aoi(id, name, wkt, mnx, mny, mxx, mxy)
-        else {
-          val fixed = Wkt.repair(polys)
-          val env = Wkt.envelope(fixed)
-          graft.model.RasterModel.Aoi(id, name, toWkt(fixed), env._1, env._2, env._3, env._4)
+      .as[Aoi].collect().map { a =>
+        f(Wkt.parse(a.geom_wkt)).fold(a) { polys =>
+          val (mnx, mny, mxx, mxy) = Wkt.envelope(polys)
+          Aoi(a.aoi_id, a.name, toWkt(polys), mnx, mny, mxx, mxy)
         }
       }
     spark.createDataFrame(rows.toSeq)
@@ -99,62 +88,47 @@ object Clip {
     * pipeline does). Returns one row per
     * (tile × overlapping AOI) with outside pixels nulled. Empty result for
     * a non-empty input means "Input shapes do not overlap raster"
-    * (compute_ndvi.py:128-131) — see [[requireOverlap]]. */
-  def clipToAoi(ndviTiles: DataFrame, aoi: DataFrame): DataFrame = {
-    val tiles = tileBounds(ndviTiles)
-    val a = element_at(col("transform"), 1)
-    val e = element_at(col("transform"), 5)
-    // pixel-center coords for flat index i: px = i % width, py = i / width
-    def px(i: Column) = col("t_minx") + a * ((i % col("width")).cast("double") + lit(0.5))
-    def py(i: Column) = col("t_maxy") + e * (floor(i / col("width")).cast("double") + lit(0.5))
-    tiles
+    * (compute_ndvi.py:128-131) — see [[requireOverlap]]. The output keeps
+    * the `t_*` envelope columns and the AOI's id, name and WKT. */
+  def clipToAoi(ndviTiles: DataFrame, aoi: DataFrame): DataFrame =
+    tileBounds(ndviTiles)
       .join(broadcast(aoi),
         bboxOverlap(col("t_minx"), col("t_miny"), col("t_maxx"), col("t_maxy"),
                     col("minx"), col("miny"), col("maxx"), col("maxy")))
-      .withColumn("pixels",
-        zip_with(col("pixels"),
-          sequence(lit(0), col("width") * col("height") - 1),
-          (p, i) => when(st_contains(col("geom_wkt"), px(i), py(i)), p)
-            .otherwise(lit(null).cast("float"))))
+      .withColumn("pixels", ClipMaskExpr(col("pixels"), col("width"), col("height"),
+        col("tile_col"), col("tile_row"), col("transform"), col("geom_wkt")))
       .drop("minx", "miny", "maxx", "maxy")
-  }
 
   /** Multi-AOI zonal statistics in ONE pass — the query the reference
     * answers by looping one AOI at a time (compute_ndvi.py runs per-AOI):
     * nodata-aware mean NDVI per (aoi_id × `dateCol`) over EVERY AOI in one
     * job. The clip semi-join generalizes unchanged: envelope overlap
-    * prunes (tile × AOI) pairs against the broadcast AOI table, exact PIP
-    * masks pixel centers, and each surviving pair folds to a (sum, count)
-    * partial INSIDE the projection — so the whole query is scan →
-    * broadcast join → project → one (aoi_id, date) aggregate exchange.
+    * prunes (tile × AOI) pairs against the broadcast AOI table, the exact
+    * mask nulls outside pixel centers, and each surviving pair folds to a
+    * (sum, count) partial ([[SumCountExpr]]) INSIDE the projection — so
+    * the whole query is scan → broadcast join → project → one
+    * (aoi_id, date) aggregate exchange.
     * At 100 TB that is the minimal shape: the tile table never shuffles
     * except for the group-by, and the fold means no explode ever
     * materializes pixels as rows. `ndviTiles` must carry `dateCol`
     * (the pipeline attaches the scene's acquisition date, F7). */
   def zonalStats(ndviTiles: DataFrame, aoi: DataFrame,
                  dateCol: String = "acquisition_date"): DataFrame = {
-    val clipped = clipToAoi(ndviTiles, aoi)
-    val acc = aggregate(col("pixels"),
-      struct(lit(0.0).as("sm"), lit(0L).as("c")),
-      (a, p) => struct(
-        (a("sm") + coalesce(p.cast("double"), lit(0.0))).as("sm"),
-        (a("c") + p.isNotNull.cast("long")).as("c")))
-    clipped
-      .select(col("aoi_id"), col(dateCol), acc.as("acc"))
+    clipToAoi(ndviTiles, aoi)
+      .select(col("aoi_id"), col(dateCol), SumCountExpr(col("pixels")).as("acc"))
       .groupBy(col("aoi_id"), col(dateCol))
-      .agg(sum(col("acc.sm")).as("sum_ndvi"), sum(col("acc.c")).as("n_valid"))
+      .agg(sum(col("acc.s")).as("sum_ndvi"), sum(col("acc.c")).as("n_valid"))
       .select(col("aoi_id"), col(dateCol),
         when(col("n_valid") > 0, col("sum_ndvi") / col("n_valid"))
           .otherwise(lit(null)).as("mean_ndvi"),
         col("n_valid"))
   }
 
-  /** The reference's overlap error, as an action-time check (the reference
-    * raises eagerly per scene; our plan-level equivalent validates the
-    * clip result before the sink). */
-  def requireOverlap(clipped: DataFrame, inputNonEmpty: Boolean): DataFrame = {
-    if (inputNonEmpty && clipped.isEmpty)
+  /** The reference's overlap error (compute_ndvi.py:128-131), checked
+    * against the clip result's row count: the reference raises eagerly
+    * per scene; the pipeline checks the count its materialization of the
+    * clip result already took. */
+  def requireOverlap(nClipped: Long, inputNonEmpty: Boolean): Unit =
+    if (inputNonEmpty && nClipped == 0)
       throw new IllegalArgumentException("Input shapes do not overlap raster")
-    clipped
-  }
 }

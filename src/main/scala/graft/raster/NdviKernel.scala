@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *  N7 nodata fill        — NULL internally; -9999f only at sink boundary
   *  N8 clamp              — [-1, 1] on real values only
   *
-  * Everything is float32 Column arithmetic inside one zip_with — a single
-  * codegen'd projection, no shuffle; the reference's NumPy vectorized loop
-  * becomes Spark's whole-stage-codegen loop.
+  * N2–N8 run in [[NdviKernelExpr]], one native float32 loop per tile
+  * inside a single codegen'd projection, no shuffle: the reference's
+  * NumPy vectorized loop becomes Spark's whole-stage-codegen loop.
   */
 object NdviKernel {
 
@@ -27,32 +27,6 @@ object NdviKernel {
   val Offset: Float = -0.2f     // compute_ndvi.py:34
   val Eps: Float = 1e-6f        // compute_ndvi.py:35
   val NodataOut: Float = -9999f // compute_ndvi.py:36
-
-  /** N2–N8 for one pixel pair (float32 columns; NULL = masked). */
-  def ndviPixel(red: Column, nir: Column,
-                redNodata: Column, nirNodata: Column): Column = {
-    // N3: mask on raw DNs (fill value 0 + declared nodata), before scaling.
-    val masked = red.isNull || nir.isNull ||
-      red === 0f || nir === 0f ||
-      (redNodata.isNotNull && red === redNodata.cast("float")) ||
-      (nirNodata.isNotNull && nir === nirNodata.cast("float"))
-    // N4: scale in float32.
-    val r = red * lit(Scale) + lit(Offset)
-    val n = nir * lit(Scale) + lit(Offset)
-    // N5: non-finite after scaling.
-    val nonFinite = isnan(r) || isnan(n) ||
-      r === Float.PositiveInfinity || r === Float.NegativeInfinity ||
-      n === Float.PositiveInfinity || n === Float.NegativeInfinity
-    // N6: epsilon-safe ratio. Spark's Divide always widens to double; the
-    // cast back to float is the closest available float32 semantics (the
-    // operands are exact float32 values, so only the final rounding step
-    // can differ from NumPy's native float32 divide, by at most one ulp
-    // in double-rounding corner cases).
-    val ratio = ((n - r) / (n + r + lit(Eps))).cast("float")
-    // N8 on real values; masked stays NULL (N7 at sink only).
-    when(masked || nonFinite, lit(null).cast("float"))
-      .otherwise(least(greatest(ratio, lit(-1f)), lit(1f)))
-  }
 
   /** N1: pair red and nir tiles of the same scene on the grid key and
     * verify grid conformance (width/height/transform equality —
@@ -86,34 +60,26 @@ object NdviKernel {
   }
 
   /** Full kernel over a band_tiles table → NDVI tile table (band='ndvi',
-    * NULL pixels = masked). One join + one per-tile projection.
-    * `useExpr` (default) runs the native NdviKernelExpr imperative loop;
-    * false falls back to the HOF zip_with chain (interpreted lambda —
-    * kept as the cross-checkable reference implementation). */
-  def computeNdvi(tiles: DataFrame, useExpr: Boolean = true): DataFrame = {
-    val kernel =
-      if (useExpr)
-        NdviKernelExpr(col("red_px"), col("nir_px"),
-                       col("red_nodata"), col("nir_nodata"))
-      else
-        zip_with(col("red_px"), col("nir_px"),
-          (r, n) => ndviPixel(r, n, col("red_nodata"), col("nir_nodata")))
+    * NULL pixels = masked). One join + one per-tile projection of the
+    * native [[NdviKernelExpr]] loop. */
+  def computeNdvi(tiles: DataFrame): DataFrame =
     pairBands(tiles).select(
       col("scene_id"), lit("ndvi").as("band"),
       col("tile_col"), col("tile_row"),
       col("width"), col("height"), col("epsg"), col("transform"),
       lit(NodataOut.toDouble).as("nodata"),
-      kernel.as("pixels"))
-  }
+      NdviKernelExpr(col("red_px"), col("nir_px"),
+                     col("red_nodata"), col("nir_nodata")).as("pixels"))
 
   /** N7 at the sink boundary: NULL → -9999f (compute_ndvi.py:68). */
   def materializeNodata(pixels: Column): Column =
     transform(pixels, p => coalesce(p, lit(NodataOut)))
 
   /** A1 `_nanmean` (load_to_postgis.py:74-79) without explode: per-tile
-    * partial (sum, count) over non-null pixels via one fold, then a final
-    * per-scene combine — the textbook partial+final aggregate; one shuffle
-    * on scene_id, constant-size rows into it. NULL when all pixels masked. */
+    * partial (sum, count) over non-null pixels ([[SumCountExpr]]), then a
+    * final per-scene combine — the textbook partial+final aggregate; one
+    * shuffle on scene_id, constant-size rows into it. NULL when all pixels
+    * masked. */
   def meanNdviPerScene(ndviTiles: DataFrame): DataFrame =
     meanNdvi(ndviTiles, Seq("scene_id"))
 
@@ -121,14 +87,7 @@ object NdviKernel {
     * for the clipped product (the reference keys ndvi_clipped.mean_ndvi by
     * (full_id, aoi_id); pooling across AOIs would double-count overlap). */
   def meanNdvi(ndviTiles: DataFrame, keys: Seq[String]): DataFrame = {
-    val partial = ndviTiles.select(
-      (keys.map(col) :+
-        aggregate(col("pixels"),
-          struct(lit(0.0).as("s"), lit(0L).as("c")),
-          (acc, p) => struct(
-            (acc("s") + coalesce(p.cast("double"), lit(0.0))).as("s"),
-            (acc("c") + p.isNotNull.cast("long")).as("c"))).as("sc")): _*)
-    partial
+    ndviTiles.select((keys.map(col) :+ SumCountExpr(col("pixels")).as("sc")): _*)
       .groupBy(keys.map(col): _*)
       .agg(sum(col("sc")("s")).as("sum_ndvi"), sum(col("sc")("c")).as("n_valid"))
       .select(

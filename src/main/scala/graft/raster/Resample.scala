@@ -1,9 +1,14 @@
 package graft.raster
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 import graft.geo.Geodesy
 import graft.model.RasterModel.BandTile
+import graft.sources.GeoTiff
 
 /** Raster resampling: overview pyramids (A2), bilinear in-tile resample,
   * and the reprojection warp (R1/R2 — reference
@@ -11,9 +16,10 @@ import graft.model.RasterModel.BandTile
   *
   * Overviews and in-tile resampling are pure array expressions — per-row
   * projections, no shuffle, nodata(NULL)-aware. The cross-CRS warp is a
-  * typed mapPartitions kernel (SURVEY.md §7: the (d) last-resort path,
-  * justified because inverse-projecting every destination pixel is
-  * genuinely imperative per-pixel math with no Spark built-in).
+  * per-partition kernel over InternalRows (SURVEY.md §7: the (d)
+  * last-resort path, justified because inverse-projecting every
+  * destination pixel is genuinely imperative per-pixel math with no Spark
+  * built-in).
   */
 object Resample {
 
@@ -66,39 +72,43 @@ object Resample {
     factors.map(overview(tiles, _)).reduce(_ unionByName _)
 
   // ---- primitive warp internals -------------------------------------------
-  // All mosaic/warp/retile intermediates are dense Array[Float] buffers
-  // with NaN as the masked sentinel — ~4 B/pixel instead of ~16–24 B of
-  // boxed Option[Float] (an 8k×8k scene mosaic is 256 MB vs >1 GB, and the
-  // per-pixel sample loop allocates nothing). The boxed Option form exists
-  // only on the BandTile row boundary (where NULL = masked is the
-  // DataFrame-level contract every operator shares).
+  // Mosaic/warp/retile intermediates are dense Array[Float] buffers with
+  // NaN as the masked sentinel, 4 B/pixel, and the per-pixel sample loop
+  // allocates nothing. The warps read and write band_tiles InternalRows
+  // (NULL = masked, the DataFrame-level contract every operator shares):
+  // pixels go from UnsafeArrayData to float[] and back, never boxed.
 
   /** Dense primitive raster: row-major Array[Float], NaN = masked. */
   private[graft] final case class Grid(width: Int, height: Int, epsg: Int,
       transform: Seq[Double], data: Array[Float])
 
-  private[graft] def toGrid(t: BandTile): Grid = {
-    val d = new Array[Float](t.width * t.height)
-    var i = 0
-    val it = t.pixels.iterator
-    while (it.hasNext) {
-      d(i) = it.next() match { case Some(v) => v; case None => Float.NaN }
-      i += 1
-    }
-    Grid(t.width, t.height, t.epsg, t.transform, d)
+  /** A band_tiles row (GeoTiff.tileRowSchema) as a Grid, NULL → NaN. */
+  private def gridOf(r: InternalRow): Grid = {
+    val px = r.getArray(9)
+    val d = new Array[Float](px.numElements())
+    for (i <- d.indices) d(i) = if (px.isNullAt(i)) Float.NaN else px.getFloat(i)
+    Grid(r.getInt(4), r.getInt(5), r.getInt(6), r.getArray(7).toDoubleArray().toSeq, d)
   }
 
-  /** Boundary conversion back to the row model (NaN → NULL). */
-  private[graft] def gridTile(proto: BandTile, g: Grid, tc: Int, tr: Int): BandTile = {
-    val px = new Array[Option[Float]](g.data.length)
-    var i = 0
-    while (i < g.data.length) {
-      px(i) = if (java.lang.Float.isNaN(g.data(i))) None else Some(g.data(i))
-      i += 1
-    }
-    proto.copy(tile_col = tc, tile_row = tr, width = g.width, height = g.height,
-      epsg = g.epsg, transform = g.transform, pixels = px.toSeq)
+  /** Grid `g` as the band_tiles row of tile (tc, tr), NaN → NULL. */
+  private def tileRow(scene: UTF8String, band: UTF8String, tc: Int, tr: Int, g: Grid,
+                      nodata: Any): InternalRow = {
+    val px = UnsafeArrayData.createFreshArray(g.data.length, 4)
+    for (i <- g.data.indices)
+      if (java.lang.Float.isNaN(g.data(i))) px.setNullAt(i) else px.setFloat(i, g.data(i))
+    new GenericInternalRow(Array[Any](scene, band, tc, tr, g.width, g.height, g.epsg,
+      UnsafeArrayData.fromPrimitiveArray(g.transform.toArray), nodata, px))
   }
+
+  private def nodataOf(r: InternalRow): Any = if (r.isNullAt(8)) null else r.getDouble(8)
+
+  /** String column `i` of `r`, copied out of the row's buffer. */
+  private def key(r: InternalRow, i: Int): UTF8String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).copy()
+
+  /** `tiles` as band_tiles rows in GeoTiff.tileRowSchema's column order. */
+  private def rowsOf(tiles: Dataset[BandTile]): DataFrame =
+    tiles.toDF().select(GeoTiff.tileRowSchema.fieldNames.map(col): _*)
 
   /** R1/R2 warp: reproject each tile's pixel grid to `dstEpsg` at a fixed
     * resolution, bilinear for float data / nearest otherwise (the
@@ -112,16 +122,12 @@ object Resample {
   def reprojectTiles(spark: SparkSession, tiles: Dataset[BandTile], dstEpsg: Int,
                      resM: Double = 30.0, bilinear: Boolean = true): Dataset[BandTile] = {
     import spark.implicits._
-    if (tiles.isEmpty) return tiles
-    tiles.mapPartitions(_.map { t =>
-      if (t.epsg == dstEpsg) t  // no-op elision
-      else reprojectOne(t, dstEpsg, resM, bilinear)
-    })
+    Bridge.flatMapRows(spark, rowsOf(tiles), GeoTiff.tileRowSchema)(_.map { r =>
+      if (r.getInt(6) == dstEpsg) r.copy()  // no-op elision
+      else tileRow(key(r, 0), key(r, 1), r.getInt(2), r.getInt(3),
+        warpGrid(gridOf(r), dstEpsg, resM, bilinear), nodataOf(r))
+    }).as[BandTile]
   }
-
-  private[graft] def reprojectOne(t: BandTile, dstEpsg: Int, resM: Double,
-                                   bilinear: Boolean): BandTile =
-    gridTile(t, warpGrid(toGrid(t), dstEpsg, resM, bilinear), t.tile_col, t.tile_row)
 
   private[graft] def warpGrid(g: Grid, dstEpsg: Int, resM: Double,
                               bilinear: Boolean): Grid = {
@@ -145,15 +151,16 @@ object Resample {
     val outW = math.max(1, math.ceil((maxX - minX) / res).toInt)
     val outH = math.max(1, math.ceil((maxY - minY) / res).toInt)
     val out = new Array[Float](outW * outH)
+    val src = new Array[Double](2)  // one source point, reused per pixel
     var j = 0
     while (j < outH) {
       var i = 0
       while (i < outW) {
         val x = minX + res * (i + 0.5)
         val y = maxY - res * (j + 0.5)
-        val (sx, sy) = Geodesy.transformPoint(x, y, dstEpsg, g.epsg)
-        val fcol = (sx - c) / a - 0.5
-        val frow = (sy - f) / e - 0.5
+        Geodesy.transformPoint(x, y, dstEpsg, g.epsg, src)
+        val fcol = (src(0) - c) / a - 0.5
+        val frow = (src(1) - f) / e - 0.5
         out(j * outW + i) =
           if (bilinear) bilinearSample(g.data, g.width, g.height, fcol, frow)
           else nearestSample(g.data, g.width, g.height, fcol, frow)
@@ -169,56 +176,53 @@ object Resample {
     * the reference's whole-image semantics (it warps full scenes,
     * load_to_postgis.py:90-136) and the honest scale design: a scene is
     * the bounded work unit (Landsat ≈ 8k×8k), parallelism is ACROSS
-    * scenes — groupByKey shuffles tiles once on (scene_id, band), each
-    * group warps independently. Destination pixels near tile seams sample
-    * across source-tile boundaries correctly because the mosaic is whole. */
+    * scenes — tiles shuffle once on (scene_id, band) and sort within
+    * partitions, and each group warps independently as its rows stream
+    * past. Destination pixels near tile seams sample across source-tile
+    * boundaries correctly because the mosaic is whole. */
   def reprojectScenes(spark: SparkSession, tiles: Dataset[BandTile], dstEpsg: Int,
                       resM: Double = 30.0, bilinear: Boolean = true,
                       tileSize: Int = graft.model.RasterModel.TileSize): Dataset[BandTile] = {
     import spark.implicits._
-    tiles.groupByKey(t => (t.scene_id, t.band)).flatMapGroups {
-      (_: (String, String), ts: Iterator[BandTile]) =>
-        val group = ts.toSeq
-        if (group.head.epsg == dstEpsg) group.iterator  // no-op elision
+    val sorted = rowsOf(tiles).repartition(col("scene_id"), col("band"))
+      .sortWithinPartitions("scene_id", "band")
+    Bridge.flatMapRows(spark, sorted, GeoTiff.tileRowSchema) { rows =>
+      val in = rows.buffered  // rows are reused buffers: read or copy before advancing
+      Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+        val (scene, band) = (key(in.head, 0), key(in.head, 1))
+        val group = Iterator.continually(()).takeWhile(_ => in.hasNext &&
+          in.head.getUTF8String(0) == scene && in.head.getUTF8String(1) == band).map(_ => in.next())
+        if (in.head.getInt(6) == dstEpsg) group.map(_.copy())  // no-op elision
         else {
-          // pure-Grid chain: box back to rows only at the final emit
-          val mosaic = assembleGrid(group, tileSize)
-          val warped = warpGrid(mosaic, dstEpsg, resM, bilinear)
-          val proto = group.head
-          retileGrid(warped, tileSize)
-            .map { case (tc, tr, sub) => gridTile(proto, sub, tc, tr) }
-            .iterator
+          val nodata = nodataOf(in.head)
+          val mosaic = assembleGrid(group.map(r => (r.getInt(2), r.getInt(3), gridOf(r))).toSeq,
+            tileSize)
+          retileGrid(warpGrid(mosaic, dstEpsg, resM, bilinear), tileSize).iterator
+            .map { case (tc, tr, sub) => tileRow(scene, band, tc, tr, sub, nodata) }
         }
-    }
+      }
+    }.as[BandTile]
   }
 
-  /** Mosaic a scene's tiles (shared transform grid) into one Grid. */
-  private[graft] def assembleGrid(tiles: Seq[BandTile], tileSize: Int): Grid = {
-    val t0 = tiles.head
-    val Seq(a, b, c0, d0, e, f) = t0.transform
-    val minCol = tiles.map(_.tile_col).min
-    val minRow = tiles.map(_.tile_row).min
-    val maxCol = tiles.map(t => t.tile_col * tileSize + t.width).max - minCol * tileSize
-    val maxRow = tiles.map(t => t.tile_row * tileSize + t.height).max - minRow * tileSize
+  /** Mosaic a scene's tiles (grid position and tile, on one shared
+    * transform grid) into one Grid. */
+  private[graft] def assembleGrid(tiles: Seq[(Int, Int, Grid)], tileSize: Int): Grid = {
+    val Seq(a, b, c0, d0, e, f) = tiles.head._3.transform
+    val minCol = tiles.map(_._1).min
+    val minRow = tiles.map(_._2).min
+    val maxCol = tiles.map(t => t._1 * tileSize + t._3.width).max - minCol * tileSize
+    val maxRow = tiles.map(t => t._2 * tileSize + t._3.height).max - minRow * tileSize
     val data = Array.fill(maxCol * maxRow)(Float.NaN)
-    tiles.foreach { t =>
-      val src = toGrid(t).data
-      val ox = (t.tile_col - minCol) * tileSize
-      val oy = (t.tile_row - minRow) * tileSize
-      var r = 0
-      while (r < t.height) {
-        System.arraycopy(src, r * t.width, data, (oy + r) * maxCol + ox, t.width)
-        r += 1
-      }
+    tiles.foreach { case (tc, tr, t) =>
+      val ox = (tc - minCol) * tileSize
+      val oy = (tr - minRow) * tileSize
+      for (r <- 0 until t.height)
+        System.arraycopy(t.data, r * t.width, data, (oy + r) * maxCol + ox, t.width)
     }
-    Grid(maxCol, maxRow, t0.epsg,
+    Grid(maxCol, maxRow, tiles.head._3.epsg,
       Seq(a, b, c0 + a * (minCol * tileSize), d0,
           e, f + e * (minRow * tileSize)), data)
   }
-
-  /** BandTile-facing mosaic (spec surface; production path stays on Grid). */
-  private[graft] def assembleScene(tiles: Seq[BandTile], tileSize: Int): BandTile =
-    gridTile(tiles.head, assembleGrid(tiles, tileSize), 0, 0)
 
   /** Split a (possibly large) grid back into tileSize blocks. */
   private[graft] def retileGrid(g: Grid, tileSize: Int): Seq[(Int, Int, Grid)] = {
@@ -240,11 +244,6 @@ object Resample {
       (tc, tr, Grid(w, h, g.epsg, g.transform, data))
     }
   }
-
-  /** BandTile-facing retile (spec surface). */
-  private[graft] def retile(t: BandTile, tileSize: Int): Seq[BandTile] =
-    retileGrid(toGrid(t), tileSize)
-      .map { case (tc, tr, sub) => gridTile(t, sub, tc, tr) }
 
   private def pixelAt(d: Array[Float], w: Int, h: Int, col: Int, row: Int): Float =
     if (col < 0 || row < 0 || col >= w || row >= h) Float.NaN

@@ -136,11 +136,16 @@ object AssetFetch {
     val ok = col("error").isNull &&
       SceneCatalog.validDownload(col("content_type"), col("size_bytes"), minBytes)
     val (valid, rejected) = Writers.splitRejects(fetched, ok, "invalid_download")
-    val tiles = Bridge.flatMapRows(spark, valid.select("scene_id", "band", "content"),
+    val tiles = Bridge.flatMapRows(spark, valid.select("scene_id", "band", "content", "href"),
       GeoTiff.tileRowSchema)(_.flatMap { row =>
         // the input row's buffer is reused: copy the keys the tiles keep
         def key(i: Int) = if (row.isNullAt(i)) null else row.getUTF8String(i).copy()
-        GeoTiff.tileRows(key(0), key(1), row.getBinary(2))
+        // decode is lazy: name the asset on every step that can fail
+        val href = String.valueOf(row.getUTF8String(3))
+        def named[T](step: => T): T = try step catch { case e: GeoTiff.DecodeException =>
+          throw new GeoTiff.DecodeException(s"$href: ${e.getMessage}", e) }
+        val it = named(GeoTiff.tileRows(key(0), key(1), row.getBinary(2)))
+        Iterator.continually(()).takeWhile(_ => named(it.hasNext)).map(_ => named(it.next()))
       }).as[BandTile]
     val rejects = rejected
       .withColumn("reject_reason", coalesce(col("error"), col("reject_reason")))

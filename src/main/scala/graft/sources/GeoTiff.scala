@@ -595,7 +595,7 @@ object GeoTiff {
     * [[graft.model.RasterModel.bandTileSchema]] with the nullability of
     * the [[BandTile]] encoder, so a frame of these rows is
     * interchangeable with one encoded from BandTile values. */
-  private[sources] lazy val tileRowSchema: StructType = Encoders.product[BandTile].schema
+  private[graft] lazy val tileRowSchema: StructType = Encoders.product[BandTile].schema
 
   /** Level 0 of one TIFF as band_tiles rows in [[tileRowSchema]]: the
     * rows [[toBandTiles]] describes, with `pixels` an UnsafeArrayData

@@ -285,6 +285,25 @@ class GeoTiffSpec extends SparkSpec {
     assert(decodeError(256, 65, 257) == s"Truncated LZW tile 1: 1 of ${ts * ts * 2} bytes")
   }
 
+  test("fetchToTiles: a corrupt deflate tile fails with a decode error naming the href") {
+    val good = GeoTiff.write(data, w, h, 32635, tf, Some(0.0), ts, deflate = true)
+    val info = GeoTiff.readInfo(good)
+    // tile 1's payload: a zlib header, then a block of the reserved type 3
+    val bad = good.clone()
+    System.arraycopy(Array[Byte](0x78, 0x9c.toByte, 0xff.toByte), 0, bad,
+      info.tileOffsets(1).toInt, 3)
+    val p = Files.createTempDirectory("graft_corrupt").resolve("S_red.tif")
+    Files.write(p, bad)
+    val href = p.toUri.toString
+    val (tiles, _) = graft.sources.AssetFetch.fetchToTiles(spark,
+      Seq(("S", "red", href)).toDF("scene_id", "band", "href"), minBytes = 1L)
+    val e = intercept[Exception](tiles.toDF().collect())
+    val decode = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case d: GeoTiff.DecodeException => d }
+    assert(decode.exists(d => d.getMessage.startsWith(s"$href: Corrupt deflate tile 1: ")),
+      s"no decode error naming $href in ${e.getMessage}")
+  }
+
   test("reader rejects non-TIFF and unsupported layouts") {
     intercept[IllegalArgumentException] {
       GeoTiff.readInfo("not a tiff at all".getBytes)

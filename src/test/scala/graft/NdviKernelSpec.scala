@@ -81,7 +81,7 @@ class NdviKernelSpec extends SparkSpec {
     val clipped = Clip.clipToAoi(ndvi, RasterModel.aoiDisjoint(spark))
     assert(clipped.isEmpty)
     val e = intercept[IllegalArgumentException] {
-      Clip.requireOverlap(clipped, inputNonEmpty = true)
+      Clip.requireOverlap(clipped.count(), inputNonEmpty = true)
     }
     assert(e.getMessage.contains("do not overlap"))
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model.RasterModel
 import graft.pipeline.NdviPipeline
+import graft.raster.{Clip, NdviKernel}
 import graft.sink.Writers
 
 /** End-to-end pipeline composition + sink conflict semantics
@@ -11,8 +12,9 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("transform stage: dummy scene through ndvi+clip+mean") {
-    val (ndvi, clipped, mean) = NdviPipeline.transformStage(
-      RasterModel.dummyConstant(spark), RasterModel.aoiOverlap(spark))
+    val ndvi = NdviKernel.computeNdvi(RasterModel.dummyConstant(spark))
+    val clipped = Clip.clipToAoi(ndvi, RasterModel.aoiOverlap(spark))
+    val mean = NdviKernel.meanNdviPerScene(clipped)
     assert(ndvi.count() == 1)
     assert(clipped.count() == 1)
     val m = mean.head
