@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 import graft.raster.{Clip, NdviKernel}
 import graft.sink.Writers
 
@@ -12,13 +14,11 @@ import graft.sink.Writers
   * per-scene mean (A1) → conflict-semantic sinks (K3–K6).
   *
   * Where the reference writes a GeoTIFF between stages so each stage runs
-  * once per scene (main.py:124-125), [[run]] materializes three frames
-  * once each as persisted copies: the selected scenes' decoded tiles, the
-  * clipped NDVI tiles and the per-(scene, AOI) means. Every later action
-  * (CRS probe, footprint log, overlap check, run summary) and every
-  * product commit reads those copies, so fetch → decode → pair → NDVI →
-  * clip → mean is evaluated once per run instead of once per action. The
-  * copies are released through [[Result.release]] after the last commit.
+  * once per scene (main.py:124-125), [[run]] keeps two persisted copies,
+  * the NDVI tiles and the clipped tiles, and answers its driver-side
+  * questions from rows it collects once each: the catalog selection, the
+  * NDVI tiles' metadata and the per-(scene, AOI) means. The copies are
+  * released through [[Result.release]] after the last commit.
   */
 object NdviPipeline {
 
@@ -33,18 +33,6 @@ object NdviPipeline {
               col("datetime") < date_add(lit(end).cast("date"), 1).cast("timestamp"))
       .orderBy(col("scene_id")).limit(maxItems) // deterministic L1 bound
       .filter(!col("scene_id").startsWith("LE07"))
-
-  /** Load stage with reference conflict semantics: ndvi_full is
-    * insert-if-absent on scene_id (K4), ndvi_clipped merges on
-    * (scene_id, aoi_id) (K5). */
-  def loadStage(existingFull: DataFrame, newFull: DataFrame,
-                existingClipped: DataFrame, newClipped: DataFrame): (DataFrame, DataFrame) = {
-    val full = existingFull.unionByName(
-      Writers.insertIfAbsent(existingFull, newFull, Seq("scene_id")))
-    val clipped = Writers.merge(existingClipped, newClipped,
-      Seq("scene_id", "aoi_id"), tieBreak = "scene_id")
-    (full, clipped)
-  }
 
   /** Run summary (A3, reference main.py:114-152): per-scene status rows →
     * totals / successes / failures. */
@@ -86,10 +74,15 @@ object NdviPipeline {
   /** The complete reference trace (main.py:94-158): settings → catalog
     * predicates → band pairing + NDVI kernel → AOI clip → overview
     * pyramid → viz warp to products.reproject_crs → per-scene mean →
-    * K4/K5 upserts → run summary. The selected tiles, the clipped tiles
-    * and the means are materialized once each; if `run` throws after
-    * that, it releases them itself, otherwise the returned [[Result]]
-    * owns them. */
+    * K4/K5 upserts → run summary.
+    *
+    * Materialized: the selected band tiles (released once the NDVI tiles
+    * are built from them), the NDVI tiles and the clipped tiles.
+    * Collected: the catalog selection (scene count, tile filter,
+    * acquisition dates), the NDVI tiles' metadata (EPSG set, footprint
+    * log, the scenes `ndvi_full` gains) and the means (`mean`, summary).
+    * The clip's row count answers the overlap check. If `run` throws it
+    * releases its copies; otherwise the returned [[Result]] owns them. */
   def run(spark: SparkSession,
           settings: graft.config.Settings,
           catalog: DataFrame,
@@ -99,43 +92,44 @@ object NdviPipeline {
           existingClipped: DataFrame,
           runLog: graft.sink.RunLog = graft.sink.RunLog.Noop): Result = {
     import spark.implicits._
-    val tileCols = Seq("scene_id", "band", "tile_col", "tile_row", "width",
-      "height", "epsg", "transform", "nodata", "pixels")
-    val selected = filterCatalog(catalog,
-      settings.download.maxCloudCover,
-      settings.dates.start, settings.dates.end,
-      settings.download.maxItems)
+    // acquisition_date per scene from the catalog's datetime (reference
+    // parses it per scene, load_to_postgis.py:178-183)
+    val picked = filterCatalog(catalog, settings.download.maxCloudCover,
+      settings.dates.start, settings.dates.end, settings.download.maxItems)
+      .select(col("scene_id"), col("datetime").cast("date").as("acquisition_date"))
+    val pickedRows = picked.collect()
+    val sceneIds = pickedRows.map(_.getString(0)).distinct
+    val nScenes = sceneIds.length.toLong
     val releases = collection.mutable.ArrayBuffer.empty[() => Unit]
-    def releaseAll(): Unit = releases.foreach(_())
     def materialize(df: DataFrame): (DataFrame, Long) = {
       val (m, n, release) = Bridge.materializeCount(spark, df)
       releases += release
       (m, n)
     }
     try {
-      val (selectedTiles, _) = materialize(tiles.join(
-        broadcast(selected.select(col("scene_id"))), Seq("scene_id")))
-      val ndvi = NdviKernel.computeNdvi(selectedTiles)
+      // the pair self-joins its input: a copy makes fetch and decode run once
+      val (bands, _, releaseBands) = Bridge.materializeCount(spark,
+        tiles.filter(col("scene_id").isin(sceneIds: _*)))
+      val (ndvi, _) = try materialize(NdviKernel.computeNdvi(bands)) finally releaseBands()
+      val meta = Clip.tileBounds(ndvi)
+        .select("scene_id", "epsg", "t_minx", "t_miny", "t_maxx", "t_maxy").collect()
       // C4: repair-or-reject invalid AOI geometry at ingest (the reference's
       // union + buffer(0) step, compute_ndvi.py:115-126) — BEFORE the CRS
       // reproject, like the reference's to_crs → buffer(0) order.
       val aoiValid = Clip.validateAoi(aoi)
       // AOI into the tiles' CRS (C3) when the scene grid is projected and
       // uniform; mixed-CRS tile tables clip per-CRS upstream.
-      val tileEpsgs = selectedTiles.select("epsg").distinct()
-        .collect().map(_.getInt(0))
+      val tileEpsgs = meta.map(_.getInt(1)).distinct
       val aoiInTileCrs =
         if (tileEpsgs.length == 1) Clip.reprojectAoi(aoiValid, tileEpsgs.head)
         else aoiValid
-      // C2: footprint sanity log — selected scenes' envelope reprojected to
+      // C2: footprint sanity log — the NDVI raster's envelope reprojected to
       // WGS84, rounded 4dp (compute_ndvi.py:101-106); best-effort like the
       // reference's try/except-pass.
       if (tileEpsgs.length == 1) try {
-        val b = Clip.tileBounds(selectedTiles)
-          .agg(min(col("t_minx")), min(col("t_miny")),
-               max(col("t_maxx")), max(col("t_maxy"))).head
-        val corners = Seq((b.getDouble(0), b.getDouble(1)), (b.getDouble(2), b.getDouble(1)),
-                          (b.getDouble(0), b.getDouble(3)), (b.getDouble(2), b.getDouble(3)))
+        def bound(i: Int) = meta.filterNot(_.isNullAt(i)).map(_.getDouble(i)) // min/max skip NULL
+        val (x0, y0, x1, y1) = (bound(2).min, bound(3).min, bound(4).max, bound(5).max)
+        val corners = Seq((x0, y0), (x1, y0), (x0, y1), (x1, y1))
           .map { case (x, y) => graft.geo.Geodesy.transformPoint(x, y, tileEpsgs.head, 4326) }
         def r4(v: Double) = math.rint(v * 1e4) / 1e4
         runLog.info(s"Raster bounds (WGS84): (${r4(corners.map(_._1).min)}, " +
@@ -145,16 +139,17 @@ object NdviPipeline {
       val (clippedTiles, nClipped) = materialize(Clip.clipToAoi(ndvi, aoiInTileCrs))
       // the reference raises eagerly when nothing overlaps
       // (compute_ndvi.py:128-131); the materialization counted the rows
-      val nScenes = selected.count()
       Clip.requireOverlap(nClipped, inputNonEmpty = nScenes > 0)
       // mean per (scene, aoi) — the reference keys ndvi_clipped.mean_ndvi by
       // (full_id, aoi_id); pooling across AOIs would double-count overlap.
-      val (mean, _) = materialize(NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id")))
+      val means = NdviKernel.meanNdvi(clippedTiles, Seq("scene_id", "aoi_id"))
+      val meanRows = means.collect()
+      val mean = spark.createDataFrame(meanRows.toSeq.asJava, means.schema)
       // per-AOI clipped products: the grid key for downstream per-image ops
       // is (scene, aoi), encoded in the warp group key.
       val clippedBands = clippedTiles
         .withColumn("scene_id", concat_ws("#", col("scene_id"), col("aoi_id")))
-        .select(tileCols.map(col): _*)
+        .select(graft.model.RasterModel.bandTileSchema.fieldNames.map(col): _*)
       val overviews =
         if (settings.products.buildOverviews)
           Some(graft.raster.Resample.pyramid(clippedBands))  // [2,4,8,16,32]
@@ -163,22 +158,23 @@ object NdviPipeline {
       val viz = graft.raster.Resample.reprojectScenes(spark,
         clippedBands.as[graft.model.RasterModel.BandTile],
         vizEpsg, resM = 0.0 /* derive from source resolution */).toDF()
-      // acquisition_date per scene from the catalog's datetime
-      // (reference parses it per scene, load_to_postgis.py:178-183)
-      val newFull = ndvi.select(col("scene_id")).distinct()
-        .join(broadcast(selected.select(col("scene_id"),
-          col("datetime").cast("date").as("acquisition_date"))), Seq("scene_id"))
-      val newClipped = mean
-        .select(col("scene_id"), col("aoi_id"), col("mean_ndvi"))
-      val (full, clippedTable) = loadStage(
-        existingFull, newFull,
-        existingClipped, newClipped)
-      val nOk = mean.filter(col("mean_ndvi").isNotNull)
-        .select(col("scene_id")).distinct().count()
+      val withNdvi = meta.map(_.getString(0)).toSet
+      val newFull = spark.createDataFrame(pickedRows.filter(r => withNdvi(r.getString(0)))
+        .distinctBy(_.getString(0)).toSeq.asJava,
+        StructType(Seq(ndvi.schema("scene_id"), picked.schema("acquisition_date"))))
+      // load stage with reference conflict semantics: ndvi_full is
+      // insert-if-absent on scene_id (K4), ndvi_clipped merges on
+      // (scene_id, aoi_id) (K5)
+      val full = existingFull.unionByName(
+        Writers.insertIfAbsent(existingFull, newFull, Seq("scene_id")))
+      val clippedTable = Writers.merge(existingClipped,
+        mean.select(col("scene_id"), col("aoi_id"), col("mean_ndvi")),
+        Seq("scene_id", "aoi_id"), tieBreak = "scene_id")
+      val nOk = meanRows.filter(!_.isNullAt(2)).map(_.getString(0)).distinct.length.toLong
       runLog.info(s"Run summary: total=$nScenes succeeded=$nOk failed=${nScenes - nOk}")
       Result(full, clippedTable, viz, overviews, mean,
-        RunSummary(nScenes, nOk, nScenes - nOk), () => releaseAll())
-    } catch { case e: Throwable => releaseAll(); throw e }
+        RunSummary(nScenes, nOk, nScenes - nOk), () => releases.foreach(_()))
+    } catch { case e: Throwable => releases.foreach(_()); throw e }
   }
 
   /** K9 with snapshot isolation end-to-end: commit the run's product

@@ -126,6 +126,8 @@ object AssetFetch {
     * band_tiles of every VALID asset plus the reject rows (content
     * dropped, reason kept: the transfer error if there was one, else
     * "invalid_download" from the F10 content-type/min-size predicate).
+    * A tile that fails to decode raises a `GeoTiff.DecodeException`
+    * whose message starts with the asset's href.
     * `minBytes` is the reference's 1 MiB floor by default; tests pass a
     * smaller floor for synthetic fixtures. */
   def fetchToTiles(spark: SparkSession, assets: DataFrame,
@@ -140,12 +142,7 @@ object AssetFetch {
       GeoTiff.tileRowSchema)(_.flatMap { row =>
         // the input row's buffer is reused: copy the keys the tiles keep
         def key(i: Int) = if (row.isNullAt(i)) null else row.getUTF8String(i).copy()
-        // decode is lazy: name the asset on every step that can fail
-        val href = String.valueOf(row.getUTF8String(3))
-        def named[T](step: => T): T = try step catch { case e: GeoTiff.DecodeException =>
-          throw new GeoTiff.DecodeException(s"$href: ${e.getMessage}", e) }
-        val it = named(GeoTiff.tileRows(key(0), key(1), row.getBinary(2)))
-        Iterator.continually(()).takeWhile(_ => named(it.hasNext)).map(_ => named(it.next()))
+        GeoTiff.tileRows(key(0), key(1), row.getBinary(2), String.valueOf(row.getUTF8String(3)))
       }).as[BandTile]
     val rejects = rejected
       .withColumn("reject_reason", coalesce(col("error"), col("reject_reason")))

@@ -74,110 +74,137 @@ object GeoTiff {
 
   // ---- reader --------------------------------------------------------------
 
-  /** One IFD of a classic or BigTIFF file. `big` selects the BigTIFF
-    * entry layout (8-byte counts/values/offsets, 20-byte entries) over
-    * the classic one (4-byte, 12-byte entries). */
   /** Narrow a BigTIFF 8-byte offset/count to Int, loudly: the byte-array
     * API caps files at 2 GiB, so anything past that is a malformed (or
     * unsupported) file, not a silent wrap. */
   private def toIntChecked(v: Long, what: String): Int = {
-    require(v >= 0 && v <= Int.MaxValue, s"$what $v exceeds the 2 GiB byte-array limit")
+    check(v >= 0 && v <= Int.MaxValue, s"$what $v exceeds the 2 GiB byte-array limit")
     v.toInt
   }
 
+  /** A header check: failing it is a [[DecodeException]], like a bad tile. */
+  private def check(ok: Boolean, msg: => String): Unit =
+    if (!ok) throw new DecodeException(msg)
+
+  /** `pos` as a buffer index, once `len` bytes from it lie inside the file. */
+  private def inFile(bb: ByteBuffer, pos: Long, len: Long, what: => String): Int = {
+    check(pos >= 0 && len >= 0 && len <= bb.limit() - pos,
+      s"$what at offset $pos ($len bytes) lies outside the ${bb.limit()}-byte file")
+    pos.toInt
+  }
+
+  /** One IFD of a classic or BigTIFF file. `big` selects the BigTIFF
+    * entry layout (8-byte counts/values/offsets, 20-byte entries) over
+    * the classic one (4-byte, 12-byte entries). Every offset it follows
+    * is checked against the file before it is read. */
   private final class Ifd(val bb: ByteBuffer, big: Boolean, ifdOff: Long) {
     private val entrySize = if (big) 20 else 12
     private val inlineCap = if (big) 8 else 4
-    private val ifdPos = toIntChecked(ifdOff, "IFD offset")
-    private val nEntries: Int =
-      if (big) toIntChecked(bb.getLong(ifdPos), "IFD entry count")
-      else bb.getShort(ifdPos) & 0xffff
+    private val ifdPos = inFile(bb, ifdOff, if (big) 8 else 2, "IFD")
+    private val nEntries: Long =
+      if (big) bb.getLong(ifdPos) else bb.getShort(ifdPos) & 0xffff
     private val entryBase = ifdPos + (if (big) 8 else 2)
-    // tag -> (type, count, valueFieldPos)
-    private val entries: Map[Int, (Int, Int, Int)] =
-      (0 until nEntries).map { i =>
+    check(nEntries >= 0 && nEntries <= (bb.limit() - entryBase) / entrySize,
+      s"Entry table of the IFD at $ifdOff ($nEntries entries) lies outside the " +
+        s"${bb.limit()}-byte file")
+    // tag -> (type, count, valueFieldPos); counts are unsigned
+    private val entries: Map[Int, (Int, Long, Int)] =
+      (0 until nEntries.toInt).map { i =>
         val pos = entryBase + i * entrySize
         val tag = bb.getShort(pos) & 0xffff
         val typ = bb.getShort(pos + 2) & 0xffff
-        val count =
-          if (big) toIntChecked(bb.getLong(pos + 4), s"Tag $tag count")
-          else bb.getInt(pos + 4)
+        val count = if (big) bb.getLong(pos + 4) else bb.getInt(pos + 4) & 0xffffffffL
         tag -> ((typ, count, pos + (if (big) 12 else 8)))
       }.toMap
 
     /** File offset of the next IFD in the chain; 0 = end of chain. */
     val nextIfdOff: Long = {
-      val p = entryBase + nEntries * entrySize
+      val p = inFile(bb, entryBase + nEntries * entrySize, if (big) 8 else 4,
+        s"Next-IFD pointer of the IFD at $ifdOff")
       if (big) bb.getLong(p) else bb.getInt(p).toLong & 0xffffffffL
     }
 
-    private def typeSize(typ: Int): Int = typ match {
+    private def typeSize(tag: Int, typ: Int): Int = typ match {
       case 1 | 2 => 1   // BYTE, ASCII
       case 3 => 2       // SHORT
       case 4 => 4       // LONG
       case 12 | 16 => 8 // DOUBLE, LONG8 (BigTIFF)
-      case t => throw new IllegalArgumentException(s"Unsupported TIFF type $t")
+      case t => throw new DecodeException(s"Tag $tag: unsupported TIFF type $t")
     }
 
-    /** Where the value bytes live: inline when they fit the value field. */
-    private def valuePos(typ: Int, count: Int, field: Int): Int =
-      if (typeSize(typ) * count <= inlineCap) field
-      else if (big) toIntChecked(bb.getLong(field), "Tag value offset")
-      else bb.getInt(field)
+    /** (type, count, position) of a tag's values: inline when they fit the
+      * value field, else at the offset it holds, checked against the file. */
+    private def values(tag: Int): (Int, Int, Int) = {
+      val (typ, count, field) =
+        entries.getOrElse(tag, throw new DecodeException(s"Missing required tag $tag"))
+      check(count >= 0 && count <= bb.limit(), s"Tag $tag count $count exceeds the file")
+      val size = typeSize(tag, typ) * count
+      val pos =
+        if (size <= inlineCap) field
+        else inFile(bb, if (big) bb.getLong(field) else bb.getInt(field) & 0xffffffffL,
+          size, s"Tag $tag values")
+      (typ, count.toInt, pos)
+    }
 
     def has(tag: Int): Boolean = entries.contains(tag)
 
     def longs(tag: Int): IndexedSeq[Long] = {
-      val (typ, count, field) = entries(tag)
-      val pos = valuePos(typ, count, field)
+      val (typ, count, pos) = values(tag)
       (0 until count).map { i =>
         typ match {
           case 3 => (bb.getShort(pos + 2 * i) & 0xffff).toLong
           case 4 => bb.getInt(pos + 4 * i).toLong & 0xffffffffL
           case 16 => bb.getLong(pos + 8 * i)
-          case t => throw new IllegalArgumentException(s"Tag $tag: expected int type, got $t")
+          case t => throw new DecodeException(s"Tag $tag: expected int type, got $t")
         }
       }
     }
 
-    def doubles(tag: Int): IndexedSeq[Double] = {
-      val (typ, count, field) = entries(tag)
-      require(typ == 12, s"Tag $tag: expected DOUBLE")
-      val pos = valuePos(typ, count, field)
+    def doubles(tag: Int, atLeast: Int): IndexedSeq[Double] = {
+      val (typ, count, pos) = values(tag)
+      check(typ == 12 && count >= atLeast, s"Tag $tag: expected $atLeast DOUBLEs")
       (0 until count).map(i => bb.getDouble(pos + 8 * i))
     }
 
     def ascii(tag: Int): String = {
-      val (typ, count, field) = entries(tag)
-      require(typ == 2, s"Tag $tag: expected ASCII")
-      val pos = valuePos(typ, count, field)
+      val (typ, count, pos) = values(tag)
+      check(typ == 2, s"Tag $tag: expected ASCII")
       val raw = new Array[Byte](count)
       var i = 0
       while (i < count) { raw(i) = bb.get(pos + i); i += 1 }
       new String(raw, "US-ASCII").takeWhile(_ != '\u0000')
     }
 
-    def long1(tag: Int, default: => Long): Long =
-      if (has(tag)) longs(tag).head else default
+    /** The first value of an int tag. */
+    def long1(tag: Int): Long = {
+      val vs = longs(tag)
+      check(vs.nonEmpty, s"Tag $tag holds no value")
+      vs.head
+    }
+
+    def int1(tag: Int): Int = toIntChecked(long1(tag), s"Tag $tag value")
+
+    def int1(tag: Int, default: Int): Int = if (has(tag)) int1(tag) else default
   }
 
   /** Header parse: byte order + classic (42) vs BigTIFF (43) + first-IFD
     * offset. BigTIFF header: magic 43, offset size 8, pad 0, then the
     * 8-byte first-IFD offset. */
   private def openBuffer(bytes: Array[Byte]): (ByteBuffer, Boolean, Long) = {
+    check(bytes.length >= 8, s"Not a TIFF (${bytes.length} bytes, shorter than its header)")
     val bb = ByteBuffer.wrap(bytes)
     bb.order(bytes(0) match {
       case 'I' => ByteOrder.LITTLE_ENDIAN
       case 'M' => ByteOrder.BIG_ENDIAN
-      case b => throw new IllegalArgumentException(s"Not a TIFF (byte-order mark $b)")
+      case b => throw new DecodeException(s"Not a TIFF (byte-order mark $b)")
     })
     bb.getShort(2) match {
       case 42 => (bb, false, bb.getInt(4).toLong & 0xffffffffL)
       case 43 =>
-        require(bb.getShort(4) == 8 && bb.getShort(6) == 0,
+        check(bytes.length >= 16 && bb.getShort(4) == 8 && bb.getShort(6) == 0,
           "Bad BigTIFF header (offset size must be 8)")
         (bb, true, bb.getLong(8))
-      case m => throw new IllegalArgumentException(s"Not a TIFF (bad magic $m)")
+      case m => throw new DecodeException(s"Not a TIFF (bad magic $m)")
     }
   }
 
@@ -190,8 +217,8 @@ object GeoTiff {
     val seen = scala.collection.mutable.HashSet.empty[Long]
     var off = first
     while (off != 0) {
-      require(seen.add(off), s"Cyclic IFD chain (offset $off revisited)")
-      require(out.size < 64, "IFD chain exceeds 64 levels")
+      check(seen.add(off), s"Cyclic IFD chain (offset $off revisited)")
+      check(out.size < 64, "IFD chain exceeds 64 levels")
       val ifd = new Ifd(bb, big, off)
       out += ifd
       off = ifd.nextIfdOff
@@ -203,29 +230,31 @@ object GeoTiff {
     * `primary` supplies EPSG/nodata and the transform, with pixel size
     * scaled by the level's width/height ratio. */
   private def parseInfo(ifd: Ifd, primary: Option[Info]): Info = {
-    val width = ifd.longs(TImageWidth).head.toInt
-    val height = ifd.longs(TImageLength).head.toInt
+    val width = ifd.int1(TImageWidth)
+    val height = ifd.int1(TImageLength)
+    check(width > 0 && height > 0, s"Image size ${width}x$height")
     val tiled = ifd.has(TTileWidth) && ifd.has(TTileOffsets)
-    require(tiled || ifd.has(TStripOffsets),
+    check(tiled || ifd.has(TStripOffsets),
       "Not a tiled or stripped TIFF (no TileOffsets/StripOffsets)")
-    val bps = ifd.long1(TBitsPerSample, 1L).toInt
-    val fmt = ifd.long1(TSampleFormat, 1L).toInt
-    require((bps == 16 && fmt == 1) || (bps == 32 && fmt == 3),
+    val bps = ifd.int1(TBitsPerSample, 1)
+    val fmt = ifd.int1(TSampleFormat, 1)
+    check((bps == 16 && fmt == 1) || (bps == 32 && fmt == 3),
       s"Only uint16 or float32 samples supported, got $bps-bit format $fmt")
-    val spp = ifd.long1(TSamplesPerPixel, 1L).toInt
-    require(spp == 1, s"Only single-band TIFFs supported, got $spp samples/pixel")
-    val comp = ifd.long1(TCompression, 1L).toInt
-    require(comp == 1 || comp == 5 || comp == 8,
+    val spp = ifd.int1(TSamplesPerPixel, 1)
+    check(spp == 1, s"Only single-band TIFFs supported, got $spp samples/pixel")
+    val comp = ifd.int1(TCompression, 1)
+    check(comp == 1 || comp == 5 || comp == 8,
       s"Only none/lzw/deflate compression supported, got $comp")
-    val predictor = ifd.long1(TPredictor, 1L).toInt
-    require(predictor == 1 || (predictor == 2 && bps == 16) || (predictor == 3 && bps == 32),
+    val predictor = ifd.int1(TPredictor, 1)
+    check(predictor == 1 || (predictor == 2 && bps == 16) || (predictor == 3 && bps == 32),
       s"Only predictor none, horizontal-uint16 or floating-point-float32 supported, got $predictor")
     // georeferencing: pixel scale + tiepoint -> north-up affine; overview
     // IFDs without geo tags inherit the primary grid scaled to level size
     val transform =
       if (ifd.has(TModelPixelScale) && ifd.has(TModelTiepoint)) {
-        val Seq(sx, sy) = ifd.doubles(TModelPixelScale).take(2).toSeq
-        val tp = ifd.doubles(TModelTiepoint)
+        val scale = ifd.doubles(TModelPixelScale, 2)
+        val (sx, sy) = (scale(0), scale(1))
+        val tp = ifd.doubles(TModelTiepoint, 6)
         val (ti, tj, tx, ty) = (tp(0), tp(1), tp(3), tp(4))
         Seq(sx, 0.0, tx - ti * sx, 0.0, -sy, ty + tj * sy)
       } else primary match {
@@ -234,7 +263,7 @@ object GeoTiff {
           val fy = p.height.toDouble / height
           Seq(p.transform(0) * fx, 0.0, p.transform(2),
             0.0, p.transform(4) * fy, p.transform(5))
-        case None => throw new IllegalArgumentException(
+        case None => throw new DecodeException(
           "Primary IFD lacks ModelPixelScale/ModelTiepoint")
       }
     // EPSG from the GeoKey directory (projected key wins over geographic)
@@ -247,20 +276,21 @@ object GeoTiff {
     val nodata =
       if (ifd.has(TGdalNodata)) ifd.ascii(TGdalNodata).trim.toDoubleOption
       else primary.flatMap(_.nodata)
-    if (tiled)
-      Info(width, height,
-        ifd.longs(TTileWidth).head.toInt, ifd.longs(TTileLength).head.toInt,
-        comp, bps, fmt, epsg, transform, nodata,
-        ifd.longs(TTileOffsets), ifd.longs(TTileByteCounts),
-        stripLayout = false, predictor = predictor)
-    else {
-      // strip layout: one "tile" per strip, full image width, no row padding
-      val rps = ifd.long1(TRowsPerStrip, height.toLong).toInt
-      Info(width, height, width, rps,
-        comp, bps, fmt, epsg, transform, nodata,
-        ifd.longs(TStripOffsets), ifd.longs(TStripByteCounts),
-        stripLayout = true, predictor = predictor)
-    }
+    // strip layout: one "tile" per strip, full image width, no row padding
+    val (tileW, tileH) =
+      if (tiled) (ifd.int1(TTileWidth), ifd.int1(TTileLength))
+      else (width, if (ifd.has(TRowsPerStrip))
+        math.min(ifd.long1(TRowsPerStrip), height.toLong).toInt else height)
+    check(tileW > 0 && tileH > 0 && tileW.toLong * tileH * (bps / 8) <= Int.MaxValue,
+      s"Tile size ${tileW}x$tileH")
+    val (offsets, counts) =
+      if (tiled) (ifd.longs(TTileOffsets), ifd.longs(TTileByteCounts))
+      else (ifd.longs(TStripOffsets), ifd.longs(TStripByteCounts))
+    val n = ((width + tileW - 1L) / tileW) * ((height + tileH - 1L) / tileH)
+    check(offsets.length == n && counts.length == n,
+      s"$n segments, but ${offsets.length} offsets and ${counts.length} byte counts")
+    Info(width, height, tileW, tileH, comp, bps, fmt, epsg, transform, nodata,
+      offsets, counts, stripLayout = !tiled, predictor = predictor)
   }
 
   /** Level-0 (full-resolution) metadata. */
@@ -269,7 +299,7 @@ object GeoTiff {
   /** Metadata for every IFD: level 0 first, then each embedded overview. */
   def readInfos(bytes: Array[Byte]): IndexedSeq[Info] = {
     val chain = ifdChain(bytes)
-    require(chain.nonEmpty, "TIFF with no IFDs")
+    check(chain.nonEmpty, "TIFF with no IFDs")
     val head = parseInfo(chain.head, None)
     head +: chain.tail.map(parseInfo(_, Some(head)))
   }
@@ -477,6 +507,12 @@ object GeoTiff {
     }
   }
 
+  /** Neither codec expands its input further: deflate stops near 1032:1,
+    * and a TIFF LZW code (at least 9 bits) emits at most 3 840 bytes. A
+    * tile claiming more is corrupt, and is refused before its buffer is
+    * allocated. */
+  private val MaxExpansion = 4096L
+
   /** A tile (or strip) the reader cannot decode; the message names it. */
   final class DecodeException(msg: String, cause: Throwable = null)
       extends IllegalArgumentException(msg, cause)
@@ -543,8 +579,8 @@ object GeoTiff {
     val order =
       if (bytes(0) == 'I') ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
     val bytesPerSample = info.bitsPerSample / 8
-    val tilesAcross = (info.width + info.tileW - 1) / info.tileW
-    val tilesDown = (info.height + info.tileH - 1) / info.tileH
+    val tilesAcross = ((info.width + info.tileW - 1L) / info.tileW).toInt
+    val tilesDown = ((info.height + info.tileH - 1L) / info.tileH).toInt
     Iterator.range(0, tilesDown * tilesAcross).map { ti =>
       val tr = ti / tilesAcross
       val tc = ti % tilesAcross
@@ -560,6 +596,8 @@ object GeoTiff {
       if (off < 0 || len < 0 || off + len > bytes.length)
         throw new DecodeException(
           s"Tile $ti byte range [$off, ${off + len}) lies outside the ${bytes.length}-byte file")
+      if (info.compression != 1 && rawLen > len * MaxExpansion)
+        throw new DecodeException(s"Tile $ti: $len compressed bytes cannot hold $rawLen")
       // (raw, base): the decoded samples and where they start in `raw`
       val (raw, base) = info.compression match {
         case 8 => (inflate(bytes, off.toInt, len.toInt, rawLen, ti), 0)
@@ -599,22 +637,31 @@ object GeoTiff {
 
   /** Level 0 of one TIFF as band_tiles rows in [[tileRowSchema]]: the
     * rows [[toBandTiles]] describes, with `pixels` an UnsafeArrayData
-    * built straight from the decode buffer. */
-  private[sources] def tileRows(scene: UTF8String, band: UTF8String,
-                                bytes: Array[Byte]): Iterator[InternalRow] = {
-    val info = readInfos(bytes).head
+    * built straight from the decode buffer. A [[DecodeException]] names
+    * `source` (the file or asset) first; decode is lazy, so every step
+    * of the iterator is covered. */
+  private[sources] def tileRows(scene: UTF8String, band: UTF8String, bytes: Array[Byte],
+                                source: String): Iterator[InternalRow] = {
+    def named[T](step: => T): T = try step catch { case e: DecodeException =>
+      throw new DecodeException(s"$source: ${e.getMessage}", e) }
+    val info = named(readInfos(bytes).head)
     val transform = UnsafeArrayData.fromPrimitiveArray(info.transform.toArray)
     val nodata: Any = info.nodata.orNull
-    decodeLevel(bytes, info).map { t =>
+    val rows = decodeLevel(bytes, info).map { t =>
       new GenericInternalRow(Array[Any](scene, band, t.col, t.row, t.width, t.height,
         info.epsg, transform, nodata, UnsafeArrayData.fromPrimitiveArray(t.px)))
+    }
+    new Iterator[InternalRow] {
+      def hasNext: Boolean = named(rows.hasNext)
+      def next(): InternalRow = named(rows.next())
     }
   }
 
   /** Directory of `<scene_id>_<band>.tif` files → band_tiles Dataset, via
     * the binaryFile source: one file per input row, decoded in parallel
     * across files ([[tileRows]] per file; justified — TIFF decode is
-    * genuinely imperative byte work). */
+    * genuinely imperative byte work). A file that fails to decode raises
+    * a [[DecodeException]] whose message starts with its path. */
   def bandTiles(spark: SparkSession, dir: String): Dataset[BandTile] = {
     import spark.implicits._
     val files = spark.read.format("binaryFile")
@@ -628,7 +675,7 @@ object GeoTiff {
       val cut = stem.lastIndexOf('_')
       val (scene, band) =
         if (cut < 0) (stem, "b1") else (stem.take(cut), stem.drop(cut + 1))
-      tileRows(UTF8String.fromString(scene), UTF8String.fromString(band), row.getBinary(1))
+      tileRows(UTF8String.fromString(scene), UTF8String.fromString(band), row.getBinary(1), path)
     }).as[BandTile]
   }
 

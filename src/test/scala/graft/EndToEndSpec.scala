@@ -97,6 +97,50 @@ class EndToEndSpec extends SparkSpec {
       s"${evals.value} tile evaluations for $nTiles input tiles")
   }
 
+  test("run + commitRun launch at most 16 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val tiles = RasterModel.dummyConstant(spark)
+    val aoi = RasterModel.aoiOverlap(spark)
+    sc.addSparkListener(listener)
+    try {
+      NdviPipeline.commitRun(spark, NdviPipeline.run(spark, settings, catalog, tiles, aoi,
+        emptyFull, emptyClipped), root)
+      // listener events arrive in order: once the marker job shows up,
+      // every job before it has been seen
+      sc.setJobDescription("jobs-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!seen.contains("jobs-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains("jobs-marker"), "the listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.size - 1
+    info(s"$jobs jobs")
+    assert(jobs <= 16, s"run + commitRun launched $jobs jobs")
+  }
+
+  test("a scene the catalog lists twice counts once: summary, ndvi_full and n_valid") {
+    val twice = catalog.unionByName(catalog.filter(col("scene_id") === "TEST_SCENE"))
+    def runOn(cat: org.apache.spark.sql.DataFrame) = NdviPipeline.run(spark, settings, cat,
+      RasterModel.dummyConstant(spark), RasterModel.aoiOverlap(spark), emptyFull, emptyClipped)
+    val once = runOn(catalog)
+    val dup = runOn(twice)
+    try {
+      assert(dup.summary == NdviPipeline.RunSummary(1, 1, 0))
+      assert(dup.full.count() == 1)
+      def nValid(r: NdviPipeline.Result) = r.mean.select("n_valid").as[Long].collect().toSeq
+      assert(nValid(once) == Seq(8100L))
+      assert(nValid(dup) == nValid(once))
+    } finally { dup.release(); once.release() }
+  }
+
   test("run's materialized tiles are released after commitRun, after commitRunTxn " +
     "and when run throws") {
     val sc = spark.sparkContext

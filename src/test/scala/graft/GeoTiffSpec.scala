@@ -304,6 +304,120 @@ class GeoTiffSpec extends SparkSpec {
       s"no decode error naming $href in ${e.getMessage}")
   }
 
+  test("bandTiles: a corrupt tile or a cut header fails with a decode error that starts " +
+    "with the file's path") {
+    val good = GeoTiff.write(data, w, h, 32635, tf, Some(0.0), ts, deflate = true)
+    val info = GeoTiff.readInfo(good)
+    // tile 1's payload: a zlib header, then a block of the reserved type 3
+    val badTile = good.clone()
+    System.arraycopy(Array[Byte](0x78, 0x9c.toByte, 0xff.toByte), 0, badTile,
+      info.tileOffsets(1).toInt, 3)
+    def decodeError(bytes: Array[Byte]): (String, String) = {
+      val file = Files.createTempDirectory("graft_corrupt_dir").resolve("S_red.tif")
+      Files.write(file, bytes)
+      val e = intercept[Exception](GeoTiff.bandTiles(spark, file.getParent.toString).collect())
+      val decode = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case d: GeoTiff.DecodeException => d.getMessage }
+      (s"file:$file: ", decode.getOrElse(s"no decode error in ${e.getMessage}"))
+    }
+    val (path, tileMsg) = decodeError(badTile)
+    assert(tileMsg.startsWith(s"${path}Corrupt deflate tile 1: "), tileMsg)
+    val (path2, headerMsg) = decodeError(good.take(6))
+    assert(headerMsg == s"${path2}Not a TIFF (6 bytes, shorter than its header)", headerMsg)
+  }
+
+  /** Little-endian field access for the header tests (the writer emits
+    * little-endian files). */
+  private def le(b: Array[Byte], pos: Int, n: Int): Long =
+    (0 until n).map(i => (b(pos + i) & 0xffL) << (8 * i)).sum
+  private def putLe(b: Array[Byte], pos: Int, n: Int, v: Long): Unit =
+    (0 until n).foreach(i => b(pos + i) = (v >>> (8 * i)).toByte)
+
+  test("out-of-range header offsets, a missing tag and a short file raise a " +
+    "DecodeException naming the offset or tag") {
+    val good = GeoTiff.write(data, w, h, 32635, tf, Some(0.0), ts, deflate = true)
+    val ifd = le(good, 4, 4).toInt
+    val n = le(good, ifd, 2).toInt
+    val entry = (0 until n).map(i => le(good, ifd + 2 + 12 * i, 2).toInt -> (ifd + 2 + 12 * i)).toMap
+    def error(edit: Array[Byte] => Array[Byte]): String =
+      intercept[GeoTiff.DecodeException](GeoTiff.toBandTiles("S", "red", edit(good.clone())))
+        .getMessage
+    def patched(pos: Int, size: Int, v: Long)(b: Array[Byte]) = { putLe(b, pos, size, v); b }
+    val len = good.length
+    assert(error(patched(4, 4, len + 10L)) ==
+      s"IFD at offset ${len + 10} (2 bytes) lies outside the $len-byte file")
+    // classic offsets are unsigned: the top bit set is past any byte array
+    assert(error(patched(4, 4, 0x80000000L)).startsWith("IFD at offset 2147483648 "))
+    assert(error(patched(ifd, 2, 0xffffL)).startsWith(s"Entry table of the IFD at $ifd "))
+    assert(error(patched(ifd + 2 + 12 * n, 4, len + 100L)).startsWith(s"IFD at offset ${len + 100} "))
+    val cut = ifd + 2 + 12 * n + 2
+    assert(error(_.take(cut)) == s"Next-IFD pointer of the IFD at $ifd at offset ${cut - 2} " +
+      s"(4 bytes) lies outside the $cut-byte file")
+    assert(error(patched(entry(324) + 8, 4, len - 4L)).startsWith("Tag 324 values at offset "))
+    assert(error(patched(entry(324) + 4, 4, 0xfffffff0L)) == "Tag 324 count 4294967280 exceeds the file")
+    assert(error(patched(entry(256), 2, 65000L)) == "Missing required tag 256")
+    assert(error(patched(entry(258) + 2, 2, 99L)) == "Tag 258: unsupported TIFF type 99")
+    assert(error(_.take(7)) == "Not a TIFF (7 bytes, shorter than its header)")
+    // the chain checks raise the same type
+    assert(error(patched(ifd + 2 + 12 * n, 4, ifd.toLong)) == s"Cyclic IFD chain (offset $ifd revisited)")
+    // a strip wider than its compressed bytes can fill is refused before
+    // its buffer is allocated (ImageWidth is an inline LONG)
+    val strips = GeoTiff.writeStrips(data, w, h, 32635, tf, Some(0.0), rowsPerStrip = 32,
+      compression = 8)
+    val sIfd = le(strips, 4, 4).toInt
+    val widthAt = (0 until le(strips, sIfd, 2).toInt).map(i => sIfd + 2 + 12 * i)
+      .find(le(strips, _, 2) == 256).get
+    val wide = strips.clone()
+    putLe(wide, widthAt + 8, 4, 1000000L)
+    val msg = intercept[GeoTiff.DecodeException](GeoTiff.toBandTiles("S", "red", wide)).getMessage
+    assert(msg.matches("Tile 0: \\d+ compressed bytes cannot hold 64000000"), msg)
+  }
+
+  test("header fuzz: seeded truncations and byte flips of the header and first IFD " +
+    "either decode or raise a DecodeException, within a time bound") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val fixtures = Seq(
+      "tiled deflate" -> GeoTiff.write(data, w, h, 32635, tf, Some(0.0), ts, deflate = true),
+      "strips lzw" -> GeoTiff.writeStrips(data, w, h, 32635, tf, Some(0.0),
+        rowsPerStrip = 32, compression = 5, predictor = 2),
+      "bigtiff pyramid" -> GeoTiff.writeMultiIfd(Seq(
+        GeoTiff.ImageSpec(Left(data), w, h, 32635, tf, Some(0.0), tileSize = ts, compression = 8),
+        GeoTiff.ImageSpec(Left(Array.fill(50 * 35)(9)), 50, 35, 32635, tf, tileSize = ts,
+          reduced = true, geoTags = false)), bigTiff = true))
+    val rnd = new scala.util.Random(7)
+    // (fixture, case, bytes)
+    val cases = fixtures.flatMap { case (name, good) =>
+      val big = good(2) == 43
+      val ifd = (if (big) le(good, 8, 8) else le(good, 4, 4)).toInt
+      val ifdEnd = if (big) ifd + 16 + 20 * le(good, ifd, 8).toInt
+                   else ifd + 6 + 12 * le(good, ifd, 2).toInt
+      val region = (0 until (if (big) 16 else 8)) ++ (ifd until ifdEnd)
+      val cuts = ((0 to 16) ++ Seq.fill(40)(rnd.nextInt(good.length)) ++
+          Seq.fill(20)(ifd + rnd.nextInt(ifdEnd - ifd)))
+        .map(n => (name, s"cut at $n", good.take(n)))
+      val flips = (1 to 160).map { i =>
+        val b = good.clone()
+        val at = (1 to (if (i % 4 == 0) 3 else 1)).map(_ => region(rnd.nextInt(region.length)))
+        at.foreach(p => b(p) = (b(p) ^ (1 + rnd.nextInt(255))).toByte)
+        (name, s"flip at ${at.mkString(",")}", b)
+      }
+      cuts ++ flips
+    }
+    assert(cases.length > 600)
+    val t0 = System.nanoTime()
+    val escaped = Await.result(Future(cases.flatMap { case (name, what, bytes) =>
+      try { GeoTiff.readInfos(bytes); GeoTiff.toBandTiles("S", "red", bytes); None }
+      catch {
+        case _: GeoTiff.DecodeException => None
+        case t: Throwable => Some(s"$name, $what: $t")
+      }
+    }), 120.seconds)
+    assert(escaped.isEmpty, s"${escaped.length} cases escaped: ${escaped.take(5).mkString("; ")}")
+    info(f"${cases.length} cases in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
   test("reader rejects non-TIFF and unsupported layouts") {
     intercept[IllegalArgumentException] {
       GeoTiff.readInfo("not a tiff at all".getBytes)
