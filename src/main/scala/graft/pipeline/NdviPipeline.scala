@@ -76,8 +76,9 @@ object NdviPipeline {
     * pyramid → viz warp to products.reproject_crs → per-scene mean →
     * K4/K5 upserts → run summary.
     *
-    * Materialized: the selected band tiles (released once the NDVI tiles
-    * are built from them), the NDVI tiles and the clipped tiles.
+    * Materialized: the NDVI tiles, built in one pass over `tiles` (no
+    * band copy: the pair reads each band tile once), and the clipped
+    * tiles.
     * Collected: the catalog selection (scene count, tile filter,
     * acquisition dates), the NDVI tiles' metadata (EPSG set, footprint
     * log, the scenes `ndvi_full` gains) and the means (`mean`, summary).
@@ -107,10 +108,10 @@ object NdviPipeline {
       (m, n)
     }
     try {
-      // the pair self-joins its input: a copy makes fetch and decode run once
-      val (bands, _, releaseBands) = Bridge.materializeCount(spark,
-        tiles.filter(col("scene_id").isin(sceneIds: _*)))
-      val (ndvi, _) = try materialize(NdviKernel.computeNdvi(bands)) finally releaseBands()
+      // one pass over `tiles`: the pair groups both bands of a grid key
+      // from a single scan, so fetch and decode run once without a copy
+      val (ndvi, _) = materialize(
+        NdviKernel.computeNdvi(tiles.filter(col("scene_id").isin(sceneIds: _*))))
       val meta = Clip.tileBounds(ndvi)
         .select("scene_id", "epsg", "t_minx", "t_miny", "t_maxx", "t_maxy").collect()
       // C4: repair-or-reject invalid AOI geometry at ingest (the reference's

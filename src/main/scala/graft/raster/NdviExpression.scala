@@ -4,10 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
   GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   IntegerType, LongType, NullType, NumericType, StringType, StructField, StructType}
@@ -17,7 +19,8 @@ import graft.model.RasterModel
 
 /** The per-tile raster kernels as native Catalyst expressions — the perf
   * path promised in SURVEY.md §7 step 2: NDVI (N2–N8), the AOI clip mask
-  * and the (sum, count) partial of the mean. Spark's higher-order
+  * and the (sum, count) partial of the mean (and [[SumCountAgg]], its
+  * combine). Spark's higher-order
   * functions (zip_with/aggregate) evaluate their lambda interpreted, per
   * element; each expression here runs one JIT-compiled loop per tile over
   * primitive ArrayData.
@@ -282,4 +285,66 @@ case class SumCountExpr(child: Expression) extends TileKernel with ExpectsInputT
 object SumCountExpr {
   /** sum_count(pixels). */
   def apply(pixels: Column): Column = Bridge.toColumn(SumCountExpr(Bridge.toExpression(pixels)))
+}
+
+/** The combine of [[SumCountExpr]] partials: struct(s, c) added as SQL
+  * `sum(s)`, `sum(c)` add them (in arrival order, from 0.0, NULL partials
+  * skipped), NULL when every partial is NULL. Its buffer is an object,
+  * so Spark plans it as an object hash aggregate: each task combines its
+  * rows per key into a hash map of small buffers, where the hash
+  * aggregate of two `sum`s takes a whole Tungsten page per task; past
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` keys in a
+  * task it falls back to Spark's spillable sort-based aggregation. */
+case class SumCountAgg(child: Expression, mutableAggBufferOffset: Int = 0,
+                       inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[SumCountAgg.Acc] with UnaryLike[Expression] {
+
+  override def prettyName: String = "sum_count_agg"
+  override def nullable: Boolean = true
+  override def dataType: DataType = child.dataType
+
+  override def createAggregationBuffer(): SumCountAgg.Acc = new SumCountAgg.Acc
+
+  override def update(acc: SumCountAgg.Acc, input: InternalRow): SumCountAgg.Acc = {
+    child.eval(input) match {
+      case null =>
+      case sc: InternalRow => acc.add(sc.getDouble(0), sc.getLong(1))
+    }
+    acc
+  }
+
+  override def merge(acc: SumCountAgg.Acc, other: SumCountAgg.Acc): SumCountAgg.Acc = {
+    if (other.seen) acc.add(other.s, other.c)
+    acc
+  }
+
+  override def eval(acc: SumCountAgg.Acc): Any =
+    if (acc.seen) new GenericInternalRow(Array[Any](acc.s, acc.c)) else null
+
+  override def serialize(acc: SumCountAgg.Acc): Array[Byte] =
+    java.nio.ByteBuffer.allocate(17).putDouble(acc.s).putLong(acc.c)
+      .put((if (acc.seen) 1 else 0).toByte).array()
+
+  override def deserialize(bytes: Array[Byte]): SumCountAgg.Acc = {
+    val b = java.nio.ByteBuffer.wrap(bytes)
+    val acc = new SumCountAgg.Acc
+    acc.s = b.getDouble; acc.c = b.getLong; acc.seen = b.get == 1
+    acc
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): SumCountAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SumCountAgg = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): SumCountAgg = copy(child = c)
+}
+
+object SumCountAgg {
+  final class Acc {
+    var s = 0.0
+    var c = 0L
+    var seen = false
+    def add(ds: Double, dc: Long): Unit = { s += ds; c += dc; seen = true }
+  }
+
+  /** sum_count_agg(partials), `partials` a [[SumCountExpr]] column. */
+  def apply(partials: Column): Column = Bridge.toColumn(SumCountAgg(Bridge.toExpression(partials)))
 }

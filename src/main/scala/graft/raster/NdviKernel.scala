@@ -1,13 +1,17 @@
 package graft.raster
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The NDVI per-pixel kernel over tile tables, preserving the reference's
   * exact float32 semantics (reference src/transform/compute_ndvi.py:32-93,
   * SURVEY.md §2.3 N1–N9):
   *
-  *  N1 grid conformance   — join red/nir on the grid key + raise_error
+  *  N1 grid conformance   — pair red/nir on the grid key + raise_error
   *  N3 fill/nodata mask   — BEFORE scaling (order is load-bearing: after
   *                          scaling, DN 0 becomes -0.2 and is no longer
   *                          identifiable — compute_ndvi.py:46-52)
@@ -33,20 +37,31 @@ object NdviKernel {
     * compute_ndvi.py:39-40). Mismatch → raise_error, matching the
     * reference's ValueError("...not on the same grid").
     *
-    * Scale: this is the J4 self-join; with the tile table bucketed by
-    * (scene_id, tile_row, tile_col) it is a shuffle-free zip. Locally it
-    * is a single sort-merge/shuffled hash join on the composite key. */
+    * The J4 pairing as one keyed grouping ([[Bridge.groupRows]]) over
+    * one scan of `tiles`: the red and nir rows of a grid key meet in one
+    * group, which yields their cross product, as an inner join on the key
+    * does (a NULL key pairs nothing; other bands never leave the scan).
+    * Over a tile table bucketed by (scene_id, tile_col, tile_row) the
+    * grouping plans no exchange; otherwise both bands shuffle once on the
+    * key. */
   def pairBands(tiles: DataFrame,
                 redBand: String = "red", nirBand: String = "nir"): DataFrame = {
     val key = Seq("scene_id", "tile_col", "tile_row")
-    val red = tiles.filter(col("band") === redBand)
-      .select((key.map(col) :+ col("width") :+ col("height") :+ col("epsg") :+
-        col("transform") :+ col("nodata").as("red_nodata") :+
-        col("pixels").as("red_px")): _*)
-    val nir = tiles.filter(col("band") === nirBand)
-      .select((key.map(col) :+ col("width").as("n_width") :+
-        col("height").as("n_height") :+ col("transform").as("n_transform") :+
-        col("nodata").as("nir_nodata") :+ col("pixels").as("nir_px")): _*)
+    val side = Seq("band", "width", "height", "epsg", "transform", "nodata", "pixels")
+    val in = tiles
+      .filter((col("band") === redBand || col("band") === nirBand) &&
+        key.map(col(_).isNotNull).reduce(_ && _))
+      .select((key ++ side).map(col): _*)
+    val nirSide = in.schema.map(f => f.copy(name = "n_" + f.name))
+    val paired = Bridge.groupRows(in, key, StructType(in.schema ++ nirSide)) { groups =>
+      val (red, nir) = (UTF8String.fromString(redBand), UTF8String.fromString(nirBand))
+      val joined = new JoinedRow
+      groups.flatMap { case (_, rows) =>
+        val group = rows.toSeq
+        def ofBand(b: UTF8String) = group.filter(_.getUTF8String(3) == b)
+        for (r <- ofBand(red).iterator; n <- ofBand(nir).iterator) yield joined(r, n)
+      }
+    }
     // assert_true must be load-bearing in a kept column, or Catalyst prunes
     // it away: thread it through red_px (it returns NULL when passing).
     val gridOk = assert_true(
@@ -54,14 +69,15 @@ object NdviKernel {
         col("transform") === col("n_transform"),
       concat(lit("Input rasters for scene "), col("scene_id"),
              lit(" are not on the same grid")))
-    red.join(nir, key)
-      .withColumn("red_px", when(gridOk.isNull, col("red_px")))
-      .drop("n_width", "n_height", "n_transform")
+    paired.select(
+      (key.map(col) ++ Seq(col("width"), col("height"), col("epsg"), col("transform"),
+        col("nodata").as("red_nodata"), when(gridOk.isNull, col("pixels")).as("red_px"),
+        col("n_nodata").as("nir_nodata"), col("n_pixels").as("nir_px"))): _*)
   }
 
   /** Full kernel over a band_tiles table → NDVI tile table (band='ndvi',
-    * NULL pixels = masked). One join + one per-tile projection of the
-    * native [[NdviKernelExpr]] loop. */
+    * NULL pixels = masked). The pair's keyed grouping + one per-tile
+    * projection of the native [[NdviKernelExpr]] loop. */
   def computeNdvi(tiles: DataFrame): DataFrame =
     pairBands(tiles).select(
       col("scene_id"), lit("ndvi").as("band"),
@@ -71,15 +87,12 @@ object NdviKernel {
       NdviKernelExpr(col("red_px"), col("nir_px"),
                      col("red_nodata"), col("nir_nodata")).as("pixels"))
 
-  /** N7 at the sink boundary: NULL → -9999f (compute_ndvi.py:68). */
-  def materializeNodata(pixels: Column): Column =
-    transform(pixels, p => coalesce(p, lit(NodataOut)))
-
   /** A1 `_nanmean` (load_to_postgis.py:74-79) without explode: per-tile
     * partial (sum, count) over non-null pixels ([[SumCountExpr]]), then a
-    * final per-scene combine — the textbook partial+final aggregate; one
-    * shuffle on scene_id, constant-size rows into it. NULL when all pixels
-    * masked. */
+    * final per-scene combine ([[SumCountAgg]]) — the textbook
+    * partial+final aggregate, as an object hash aggregate (no Tungsten
+    * page); one shuffle on scene_id, constant-size rows into it. NULL
+    * when all pixels masked. */
   def meanNdviPerScene(ndviTiles: DataFrame): DataFrame =
     meanNdvi(ndviTiles, Seq("scene_id"))
 
@@ -89,11 +102,11 @@ object NdviKernel {
   def meanNdvi(ndviTiles: DataFrame, keys: Seq[String]): DataFrame = {
     ndviTiles.select((keys.map(col) :+ SumCountExpr(col("pixels")).as("sc")): _*)
       .groupBy(keys.map(col): _*)
-      .agg(sum(col("sc")("s")).as("sum_ndvi"), sum(col("sc")("c")).as("n_valid"))
+      .agg(SumCountAgg(col("sc")).as("sc"))
       .select(
         (keys.map(col) :+
-          when(col("n_valid") > 0, col("sum_ndvi") / col("n_valid"))
+          when(col("sc.c") > 0, col("sc.s") / col("sc.c"))
             .otherwise(lit(null)).as("mean_ndvi") :+
-          col("n_valid")): _*)
+          col("sc.c").as("n_valid")): _*)
   }
 }

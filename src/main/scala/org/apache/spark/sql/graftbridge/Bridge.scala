@@ -43,6 +43,25 @@ object Bridge {
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.toRdd.mapPartitions(f), schema)
 
+  /** A frame with `schema` whose rows are `fn` over the groups of `df`'s
+    * rows that share the columns named `keys` ([[GroupRows]]): the
+    * keyed-grouping counterpart of [[flatMapRows]], planned as one
+    * exchange on the keys (none over a child already clustered on them)
+    * and a spillable sort in each task. */
+  def groupRows(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+                schema: org.apache.spark.sql.types.StructType)(fn: GroupRows.Fn)
+      : org.apache.spark.sql.DataFrame = {
+    val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    GroupRows.ensurePlanned(s)
+    val child = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.analyzed
+    val resolver = s.sessionState.conf.resolver
+    val keyAttrs = keys.map(k => child.output.find(a => resolver(a.name, k)).getOrElse(
+      throw new IllegalArgumentException(s"group key $k is not a column of ${df.columns.mkString(", ")}")))
+    org.apache.spark.sql.classic.Dataset.ofRows(s, GroupRows(keyAttrs,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), fn, child))
+  }
+
   /** Materialize a DataFrame ONCE as a persisted InternalRow RDD and
     * wrap it as a fresh DataFrame whose plan is a bare LogicalRDD.
     * Like `localCheckpoint()` but WITHOUT carrying the origin plan's

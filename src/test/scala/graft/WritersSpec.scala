@@ -5,49 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import graft.model.RasterModel
-import graft.raster.NdviKernel
-import graft.sink.Writers
 
-/** Writer-side scale mechanics: tile round trip, the K8 sidecar, and
-  * date-partitioned layout with partition pruning at the scan. */
+/** Writer-side scale mechanics: manifest-stat file skipping on a
+  * versioned tile table, and date-partitioned layout with partition
+  * pruning at the scan. */
 class WritersSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("writeTiles round trip preserves the tile table") {
-    val tiles = RasterModel.dummyConstant(spark)
-    val path = Files.createTempDirectory("tiles").resolve("t").toString
-    Writers.writeTiles(tiles, path)
-    val back = spark.read.parquet(path)
-    assert(back.count() == 2)
-    val ndvi = NdviKernel.computeNdvi(back)
-    val px = ndvi.select("pixels").head.getSeq[Any](0)
-    assert(px.length == 10000 && px.head.asInstanceOf[Float] == -0.18965584f)
-  }
-
-  test("writeTiles records a K8 _table_metadata.json sidecar matching the table") {
-    val tiles = RasterModel.dummyConstant(spark)
-    val path = Files.createTempDirectory("tiles_k8").resolve("t").toString
-    Writers.writeTiles(tiles, path)
-    val raw = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(path, "_table_metadata.json")), "UTF-8")
-    // parse with Spark's JSON reader — same dialect the sidecar targets
-    val meta = spark.read.json(Seq(raw).toDS()).head
-    def seqOf[T](r: org.apache.spark.sql.Row, name: String): Seq[T] =
-      r.getSeq[T](r.fieldIndex(name)).toSeq
-    assert(seqOf[Long](meta, "srids") == Seq(4326L))
-    assert(seqOf[String](meta, "bands") == Seq("nir", "red"))
-    assert(meta.getAs[Long]("block_width") == 100L &&
-           meta.getAs[Long]("block_height") == 100L)
-    assert(seqOf[Double](meta, "pixel_scale_x") == Seq(0.1))
-    assert(seqOf[Double](meta, "pixel_scale_y") == Seq(-0.1))
-    assert(meta.getAs[Long]("n_tiles") == 2L)
-    // a rewrite recomputes the sidecar (drop + re-add cycle)
-    Writers.writeTiles(tiles.filter(col("band") === "red"), path)
-    val meta2 = spark.read.json(Seq(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(path, "_table_metadata.json")), "UTF-8")).toDS()).head
-    assert(seqOf[String](meta2, "bands") == Seq("red"))
-    assert(meta2.getAs[Long]("n_tiles") == 1L)
-  }
 
   test("versioned tile table: a scene-range read opens only the files whose manifest stats match") {
     import graft.sink.VersionedTable
@@ -59,7 +21,7 @@ class WritersSpec extends SparkSpec {
       .reduce(_ unionByName _)
       .repartitionByRange(4, col("scene_id"))
     val root = Files.createTempDirectory("tiles_skip").resolve("t").toString
-    Writers.writeTilesVersioned(tiles, root)
+    VersionedTable.create(spark, root, tiles)
     val all = VersionedTable.prunedFiles(spark, root, Map.empty)
     assert(all.size == 4)
     // a high scene range must prune the low-range files from the MANIFEST
@@ -73,26 +35,6 @@ class WritersSpec extends SparkSpec {
     // pruning is file-coarse but never loses a matching row
     assert(r.filter(col("scene_id") >= "S07")
       .select("scene_id").distinct().count() == 2)
-  }
-
-  test("writeTilesVersioned commits the tile table with the K8 sidecar; overwrite keeps old snapshots readable") {
-    import graft.sink.VersionedTable
-    val tiles = RasterModel.dummyConstant(spark)
-    val root = Files.createTempDirectory("tiles_v").resolve("t").toString
-    assert(Writers.writeTilesVersioned(tiles, root) == 1)
-    assert(VersionedTable.read(spark, root).count() == tiles.count())
-    val meta = spark.read.json(Seq(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(root, "_table_metadata.json")), "UTF-8")).toDS()).head
-    assert(meta.getAs[Long]("n_tiles") == tiles.count())
-    // overwrite publishes v2; v1 stays time-travelable, sidecar recomputed
-    val v1Reader = VersionedTable.read(spark, root)
-    assert(Writers.writeTilesVersioned(tiles.filter(col("band") === "red"), root) == 2)
-    assert(VersionedTable.read(spark, root).count() == 1)
-    assert(v1Reader.count() == tiles.count())
-    assert(VersionedTable.read(spark, root, Some(1)).count() == tiles.count())
-    val meta2 = spark.read.json(Seq(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(root, "_table_metadata.json")), "UTF-8")).toDS()).head
-    assert(meta2.getAs[Long]("n_tiles") == 1L)
   }
 
   test("date-partitioned write prunes partitions at the scan") {
