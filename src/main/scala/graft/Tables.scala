@@ -47,7 +47,14 @@ object Tables {
     // builder-applied because spark.sql.extensions is a static conf
     "spark.sql.extensions" -> "graft.plans.GraftExtensions",
     // the SQL maintenance face: CALL graft.compact(...) etc.
-    "spark.sql.catalog.graft" -> "graft.catalog.GraftCatalog")
+    "spark.sql.catalog.graft" -> "graft.catalog.GraftCatalog",
+    // TorrentBroadcast allocates one whole block for every broadcast,
+    // however small (Spark's default block is 4 MiB). The broadcasts of
+    // one ndvibench op (task binaries, scan Hadoop confs, small join
+    // sides) serialize to 0.2-112.5 KiB, median about 20 KiB, so every
+    // one fits one 128 KiB block; a larger broadcast only takes more
+    // blocks.
+    "spark.broadcast.blockSize" -> "128k")
 
   /** Run `df` under a LOWER AQE partition-coalescing floor, scoped to
     * this frame only (guide §2.2/§2.5 + §8 "use what you know that the

@@ -397,12 +397,23 @@ object VersionedTable {
                               // SOURCE files THIS commit ingested (COPY
                               // INTO's idempotence ledger) — per-commit
                               // like op/txn, never cumulative
-                              loads: Seq[String] = Seq.empty) {
+                              loads: Seq[String] = Seq.empty,
+                              // THIS commit's change-row files (a
+                              // copy-on-write merge's pre-images and the
+                              // data files of its post-images,
+                              // [[stageFiles]]) — per-commit like
+                              // op/txn/loads, never carried to a later
+                              // version
+                              changes: Seq[String] = Seq.empty) {
     /** Every read-time fill expression: write DEFAULTS (constant
       * literals) plus GENERATED columns (deterministic expressions over
       * the row's other columns) — both substitute into files recorded
       * as physically lacking the column. */
     def fillExprs: Map[String, String] = defaults ++ gens
+    /** Every data-directory file this version keeps alive: its data
+      * files and its change files. Retention treats a change file like
+      * a DV sidecar — live exactly while a manifest names it. */
+    def dataRefs: Seq[String] = files ++ changes
     /** Whether a READ of this snapshot must resolve hive partition
       * directories. `partitionCols` alone is not enough once the layout
       * EVOLVES ([[setPartitionLayout]]): a now-unpartitioned table may
@@ -529,6 +540,13 @@ object VersionedTable {
     else s""" "loads": [${m.loads.map(f => "\"" + esc(f) + "\"")
       .mkString(", ")}],\n"""
 
+  /** The commit's change-row files field — absent unless the commit
+    * wrote some. */
+  private def changesField(m: Manifest): String =
+    if (m.changes.isEmpty) ""
+    else s""" "changes": [${m.changes.map(f => "\"" + esc(f) + "\"")
+      .mkString(", ")}],\n"""
+
   private def parseTs(text: String): Long =
     """"cts": (\d+)""".r.findFirstMatchIn(text)
       .map(_.group(1).toLong).getOrElse(0L)
@@ -544,7 +562,7 @@ object VersionedTable {
       else s""" "partitionCols": [${m.partitionCols
         .map(c => "\"" + esc(c) + "\"").mkString(", ")}],\n"""
     s"""{"version": ${m.version},
-       |$opField$txnField${tsField(m)}${loadsField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
+       |$opField$txnField${tsField(m)}${loadsField(m)}${changesField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
        | "files": [${m.files.map(f => "\"" + f + "\"").mkString(", ")}],
        | ${perFileJson(m.stats, m.blooms, m.hlls, m.dvs, m.rows, m.noCol)}}""".stripMargin
   }
@@ -670,7 +688,7 @@ object VersionedTable {
     Some(
       s"""{"version": ${m.version},
          | "delta": true,
-         |$opField$txnField${tsField(m)}${loadsField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
+         |$opField$txnField${tsField(m)}${loadsField(m)}${changesField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
          | "removes": [${names(removes)}],
          | "adds": [${names(adds)}],
          | "touch": [${names(touch)}],
@@ -970,7 +988,8 @@ object VersionedTable {
     Manifest(v, schema, parseNameList(text, "files"), txn, stats, blooms,
       partitionCols, hlls, dvs, rows, parseOp(text), cm, maxCid,
       parseChecks(text), parseDefaults(text), noCol, parseGens(text),
-      parseIds(text), parseProps(text), parseTs(text), parseLoads(text))
+      parseIds(text), parseProps(text), parseTs(text), parseLoads(text),
+      parseQuotedList(text, "changes"))
   }
 
   /** Replay a delta manifest over its parent snapshot: removed entries
@@ -992,7 +1011,7 @@ object VersionedTable {
       merge(parent.rows, rows), parseOp(text), cm, maxCid,
       parseChecks(text), parseDefaults(text), merge(parent.noCol, noCol),
       parseGens(text), parseIds(text), parseProps(text), parseTs(text),
-      parseLoads(text))
+      parseLoads(text), parseQuotedList(text, "changes"))
   }
 
   private def readText(f: FileSystem, p: Path): String = {
@@ -1064,7 +1083,23 @@ object VersionedTable {
   private def writeDataFiles(spark: SparkSession, root: String, df0: DataFrame,
                              version: Int,
                              partitionCols: Seq[String] = Seq.empty,
-                             physMap: Map[String, String] = Map.empty): Seq[String] = {
+                             physMap: Map[String, String] = Map.empty): Seq[String] =
+    stageFiles(spark, root, df0, version, partitionCols, physMap)._1
+
+  /** [[writeDataFiles]] for a frame that may also carry the commit's
+    * change rows. When `df0` has the [[ChangeSide]] column, ONE write job
+    * splits its rows by that column into files of their own: `data` rows
+    * are data files only, `pre` rows (the row images the commit removes)
+    * change files only, and `post` rows (the row images it writes) files
+    * that are both. Every file has the data files' physical names and
+    * partition directories and is published with them; a change file
+    * names its side ([[isPreImage]]), and a pre-image file is not a data
+    * file: only the manifest's `changes` field names it. Returns (data
+    * files, change files). */
+  private def stageFiles(spark: SparkSession, root: String, df0: DataFrame,
+                         version: Int, partitionCols: Seq[String],
+                         physMap: Map[String, String])
+      : (Seq[String], Seq[String]) = {
     // column mapping: data files always carry the PHYSICAL names, so a
     // post-rename append's files resolve identically to pre-rename ones
     val df1 =
@@ -1081,7 +1116,9 @@ object VersionedTable {
     val df2 = xforms.filterNot(_.isInstanceOf[Layout.Identity])
       .foldLeft(df1)((d, x) =>
         d.withColumn(x.dirKey, Layout.writeExpr(x, df1.schema)))
-    val dirCols = xforms.map(_.dirKey)
+    val layoutCols = xforms.map(_.dirKey)
+    val sided = df0.columns.contains(ChangeSide)
+    val dirCols = (if (sided) Seq(ChangeSide) else Seq.empty) ++ layoutCols
     // optimized write (opt-in, the Delta optimizeWrite shape): align
     // the pre-write shuffle with the layout's own directory cells, so
     // each (day x bucket x ...) cell lands in ~one task and the hive
@@ -1089,9 +1126,9 @@ object VersionedTable {
     // files. Off by default: a caller who pre-clustered (compact,
     // zorder) must keep their ordering; an extra shuffle is not free.
     val df =
-      if (dirCols.isEmpty || !spark.conf
+      if (layoutCols.isEmpty || !spark.conf
           .get("spark.graft.optimizeWrite", "false").toBoolean) df2
-      else df2.repartition(dirCols.map(
+      else df2.repartition(layoutCols.map(
         org.apache.spark.sql.functions.col): _*)
     // writer-unique nonce: two writers optimistically staging the SAME
     // next version must not share a scratch dir or collide on data-file
@@ -1149,9 +1186,19 @@ object VersionedTable {
     // layout's append legitimately stages hundreds of cell files, and a
     // serial walk of rename+chmod round-trips makes the PUBLISH step a
     // driver bottleneck right after the write was parallelized (r19)
-    val staged = walk(scratch, "")
-    def mv(src: Path, sub: String): String = {
-      val name = s"c$version-$nonce-${src.getName}"
+    // a sided write's first directory level is the side: a change file
+    // keeps the layout directories below it and names its side
+    val staged = walk(scratch, "").map { case (src, sub0) =>
+      if (!sided) (src, sub0, SideData)
+      else {
+        val (side, rest) = sub0.span(_ != '/')
+        (src, rest.stripPrefix("/"), side.stripPrefix(s"$ChangeSide="))
+      }
+    }
+    def mv(src: Path, sub: String, side: String): String = {
+      val name =
+        if (side == SideData) s"c$version-$nonce-${src.getName}"
+        else s"c$version-$nonce-$side-${src.getName}"
       val dir = if (sub.isEmpty) dataDir(root) else new Path(dataDir(root), sub)
       f.mkdirs(dir)
       val dst = new Path(dir, name)
@@ -1159,7 +1206,7 @@ object VersionedTable {
       if (sub.isEmpty) s"data/$name" else s"data/$sub/$name"
     }
     val moved =
-      if (staged.size <= 4) staged.map { case (src, sub) => mv(src, sub) }
+      if (staged.size <= 4) staged.map { case (src, sub, side) => mv(src, sub, side) }
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(16, staged.size))
@@ -1168,14 +1215,28 @@ object VersionedTable {
           implicit val ec: ExecutionContext =
             ExecutionContext.fromExecutor(pool)
           Await.result(
-            Future.sequence(staged.map { case (src, sub) =>
-              Future(mv(src, sub)) }),
+            Future.sequence(staged.map { case (src, sub, side) =>
+              Future(mv(src, sub, side)) }),
             scala.concurrent.duration.Duration(10, "min"))
         } finally pool.shutdown()
       }
     f.delete(scratch, true)
-    moved
+    val sides = moved.zip(staged.map(_._3))
+    (sides.collect { case (f, side) if side != SidePre => f },
+      sides.collect { case (f, side) if side != SideData => f })
   }
+
+  /** The column that splits a [[stageFiles]] frame into data rows and
+    * change rows, and its three values. */
+  private val ChangeSide = "__graft_side"
+  private val SideData = "data"
+  private val SidePre = "pre"
+  private val SidePost = "post"
+
+  /** Whether change file `f` holds pre-images (signed −1) rather than
+    * post-images (+1): [[stageFiles]] names it `c<v>-<nonce>-<side>-…`. */
+  private def isPreImage(f: String): Boolean =
+    new Path(f).getName.split('-')(2) == SidePre
 
   /** Exact [lo = hi = value] stats for partition columns, synthesized
     * from the file's hive directory path — a partitioned file trivially
@@ -1528,7 +1589,11 @@ object VersionedTable {
       metaHlls: Map[String, Seq[FileHll]] = Map.empty,
       // COPY INTO's ingested source files — carried through rebases so
       // a lost CAS can't drop the idempotence ledger entry
-      loads: Seq[String] = Seq.empty)
+      loads: Seq[String] = Seq.empty,
+      // the commit's change-row files ([[stageFiles]]): their rows are
+      // relative to the files it removed, which a rebase only crosses
+      // when no interleaved commit touched them — valid at any head
+      changes: Seq[String] = Seq.empty)
 
   /** Publish `delta` on top of `base`, REBASING across concurrent
     * commits whose file footprints are DISJOINT — the Delta/Iceberg
@@ -1607,7 +1672,8 @@ object VersionedTable {
         m.rows.view.filterKeys(!gone(_)).toMap ++ delta.addedRows,
         delta.op, m.colMap, m.maxCid, m.checks, m.defaults,
         m.noCol.view.filterKeys(!gone(_)).toMap, m.gens, idAdvance(m.ids),
-        m.props ++ delta.propUpdates, loads = delta.loads)
+        m.props ++ delta.propUpdates, loads = delta.loads,
+        changes = delta.changes)
       try { writeManifest(spark, root, manifest, Some(m)); return v }
       catch {
         case e: java.io.IOException
@@ -1708,7 +1774,9 @@ object VersionedTable {
       val cur = currentVersion(spark, root)
         .getOrElse(throw new IllegalArgumentException(s"no table at $root"))
       val m = readManifest(spark, root, cur)
-      val out = transform(m)
+      // a metadata commit writes no change rows; the head's (a per-commit
+      // field, like op) must not carry into it
+      val out = transform(m).copy(changes = Seq.empty)
       try { writeManifest(spark, root, out, Some(m)); return out.version }
       catch {
         case e: java.io.IOException
@@ -4670,8 +4738,10 @@ object VersionedTable {
     * the predicate used for pruning and MUST be implied by `condition`
     * (a row matching `condition` must fall inside `preds`) — the caller
     * states both because a Catalyst Column cannot be evaluated against
-    * manifest stats. Earlier versions still read the un-deleted data
-    * (time travel); returns the new version. */
+    * manifest stats. It writes no change files: the change feed of a
+    * delete diffs the files it rewrote ([[changesBetween]]). Earlier
+    * versions still read the un-deleted data (time travel); returns the
+    * new version. */
   def deleteWhere(spark: SparkSession, root: String, preds: RangePreds,
                   condition: org.apache.spark.sql.Column): Int = {
     val cur = currentVersion(spark, root)
@@ -5103,6 +5173,19 @@ object VersionedTable {
     narrow(df.queryExecution.analyzed)
   }
 
+  /** MERGE INTO as a COPY-ON-WRITE commit (upsert by `keys`, plus
+    * optional same-commit deletes by key, `txn`-idempotent): the
+    * stats-pruned files that may hold a touched key are rewritten
+    * without those keys' rows, the source rows land beside them, and
+    * every other file carries over by name. The same write job also
+    * stages the commit's change files ([[stageFiles]]): the touched rows
+    * whose key is upserted or deleted (pre-images, −1) in files of their
+    * own, and the source rows (post-images, +1), whose data files are
+    * kept apart from the carried rows, so [[changesBetween]] over this
+    * one commit opens no other file. A merge whose keys prune every file
+    * away is a pure append and writes no change file. Every copy-on-write merge
+    * face commits through here: `mergeIntoWhen*` with `vectored = false`
+    * and [[mergeIntoEvolve]]. */
   def mergeInto(spark: SparkSession, root: String, source0: DataFrame,
                 keys: Seq[String], deletes0: Option[DataFrame] = None,
                 txn: Option[Long] = None): Int = {
@@ -5118,7 +5201,7 @@ object VersionedTable {
     try {
     val m = readManifest(spark, root, cur)
     import org.apache.spark.sql.functions.{min => fmin, max => fmax, col,
-      coalesce, lit, monotonically_increasing_id}
+      coalesce, lit, monotonically_increasing_id, when, struct}
     // Row tracking, SAME contract as the vectored path: a business
     // source WITHOUT _row_id gets it engine-filled — matched keys
     // preserve the current row's id via a lookup join over the touched
@@ -5168,13 +5251,24 @@ object VersionedTable {
           .select(schemaFields.map(col): _*)
       }
     val v = cur + 1
+    // a merge that touches no file is a pure append: its file diff is
+    // already one-sided, so it writes no change rows. Otherwise ONE scan
+    // of the touched slice tags each row: a row whose key is upserted or
+    // deleted is a pre-image, every other row carries over, and the
+    // source rows are the post-images (their files are data files too)
     val merged =
       if (touched.isEmpty) source2
-      else readSnapshotFiles(spark, root, m, touched.toSeq)
-        .join(allKeys, keys, "left_anti")
-        .unionByName(source2)
-    val added = writeDataFiles(spark, root, merged, v, m.partitionCols,
-      m.physMap)
+      else {
+        // an existence join against the broadcast keys: a NULL key
+        // matches nothing, and a duplicated key tags each row once
+        val key = if (keys.size == 1) col(keys.head) else struct(keys.map(col): _*)
+        readSnapshotFiles(spark, root, m, touched.toSeq)
+          .withColumn(ChangeSide, when(coalesce(key.isin(allKeys), lit(false)),
+            lit(SidePre)).otherwise(lit(SideData)))
+          .unionByName(source2.withColumn(ChangeSide, lit(SidePost)))
+      }
+    val (added, changes) = stageFiles(spark, root, merged, v,
+      m.partitionCols, m.physMap)
     enforceChecks(spark, root, m.checks ++ genChecks(m.gens, m.schemaDdl),
       m.schemaDdl, m.partitionCols.nonEmpty, m.physMap, added)
     val (addedStats, addedRows) = addedMeta(spark, root, m.schemaDdl, added,
@@ -5183,7 +5277,8 @@ object VersionedTable {
       removedFiles = touched, addedFiles = added,
       addedStats = addedStats, addedRows = addedRows, op = "merge",
       txn = txn,
-      assignedIds = if (tracked) Set(RowIdCol) else Set.empty))
+      assignedIds = if (tracked) Set(RowIdCol) else Set.empty,
+      changes = changes))
     } finally { releaseSrc(); matDel.foreach(_._2()) }
   }
 
@@ -5489,18 +5584,20 @@ object VersionedTable {
     // Collapsed: filter once to the claimed update rows, project each
     // field through a CASE over the claiming clause index. Identical
     // relation (the clause filters partition the rows; each row gets
-    // exactly its clause's projection), one join evaluation.
+    // exactly its clause's projection), one join evaluation. The filter
+    // leaves only claimed rows, so the LAST clause's value is the CASE's
+    // else: no null fallback, and a column stays NOT NULL when every
+    // clause's value is.
     def caseProject(base: DataFrame, idxCol: String,
                     sets: Seq[(Int, Map[String, org.apache.spark.sql.Column])],
                     fallback: String => org.apache.spark.sql.Column): Seq[DataFrame] =
       if (sets.isEmpty) Seq.empty
       else Seq(base.filter(col(idxCol).isin(sets.map(_._1): _*))
         .select(fields.toSeq.map { f =>
-          sets.foldRight(lit(null).cast(f.dataType)) { case ((i, set), rest) =>
-            when(col(idxCol) === i,
-              set.get(f.name).map(_.cast(f.dataType))
-                .getOrElse(fallback(f.name).cast(f.dataType)))
-              .otherwise(rest)
+          val vals = sets.map { case (i, set) =>
+            i -> set.get(f.name).getOrElse(fallback(f.name)).cast(f.dataType) }
+          vals.init.foldRight(vals.last._2) { case ((i, v), rest) =>
+            when(col(idxCol) === i, v).otherwise(rest)
           }.as(f.name)
         }: _*))
     val updates = caseProject(joined, "__graft_clause",
@@ -5572,16 +5669,43 @@ object VersionedTable {
             .select(keys.map(k => col(s"t.$k").as(k)): _*))
         (ups.toSeq, dk)
       }
-    val merged = ((updates ++ bsUpdates) :+ inserts).reduce(_ unionByName _)
+    val built = ((updates ++ bsUpdates) :+ inserts).reduce(_ unionByName _)
+    // a NOT NULL column some clause can set to NULL is checked per row
+    // as the merge writes (Delta's invariant check): the first NULL
+    // fails the merge with NotNullViolation, before anything commits
+    val notNull = fields.filter(f => !f.nullable && built.schema(f.name).nullable)
+      .map(_.name).toSet
+    val merged = if (notNull.isEmpty) built else built.select(fields.toSeq.map { f =>
+      if (!notNull(f.name)) col(f.name)
+      else org.apache.spark.sql.graftbridge.Bridge.toColumn(
+        org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+          org.apache.spark.sql.graftbridge.Bridge.toExpression(col(f.name)),
+          Seq(f.name))).as(f.name)
+    }: _*)
     val allDeletes = (delKeys, bsDelKeys) match {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b) => a.orElse(b)
     }
-    if (vectored) mergeIntoVectored(spark, root, merged, keys,
-      deletes0 = allDeletes, txn = txn)
-    else mergeInto(spark, root, merged, keys, deletes0 = allDeletes, txn = txn)
+    try {
+      if (vectored) mergeIntoVectored(spark, root, merged, keys,
+        deletes0 = allDeletes, txn = txn)
+      else mergeInto(spark, root, merged, keys, deletes0 = allDeletes, txn = txn)
+    } catch {
+      case e: Exception if notNull.nonEmpty =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collect { case r: org.apache.spark.SparkThrowable
+              if r.getCondition == "NOT_NULL_ASSERT_VIOLATION" =>
+            r.getMessageParameters.get("walkedTypePath").trim }
+          .find(notNull).map(new NotNullViolation(_)).getOrElse(e)
+    }
     } finally releaseSrc()
   }
+
+  /** A MERGE wrote NULL into NOT NULL column `column`; nothing was
+    * committed. */
+  final class NotNullViolation(val column: String)
+      extends IllegalArgumentException(
+        s"MERGE writes NULL into NOT NULL column $column; nothing was committed")
 
   /** APPLY CHANGES — fold a CDC changelog into the table with
     * SEQUENCE-GUARDED upserts (the Delta Live Tables APPLY CHANGES INTO
@@ -5807,14 +5931,20 @@ object VersionedTable {
   }
 
   /** Change data feed between two committed versions: (rowsAdded,
-    * rowsRemoved). Because data files are immutable and every commit
-    * carries files over BY NAME, the diff reads ONLY the file-set
-    * difference — rows in files v2 references but v1 doesn't, minus rows
-    * both sides re-wrote unchanged (multiset EXCEPT ALL both ways, so a
-    * compaction that rewrites identical rows into new files reports no
-    * changes). Carried-over files are never opened: a small mergeInto
-    * against a huge table diffs in time proportional to the rewrite, not
-    * the table. An update surfaces as remove(old row) + add(new row). */
+    * rowsRemoved) as multisets — an update surfaces as remove(old row) +
+    * add(new row), and a row rewritten unchanged surfaces in neither.
+    * When `toV` is ONE copy-on-write merge commit ([[mergeInto]] and every
+    * merge face over it) that wrote change files, both sides come from
+    * those small files: its pre-images and the files of its source rows.
+    * Otherwise, because data files are immutable and every
+    * commit carries files over BY NAME, the diff reads ONLY the file-set
+    * difference — rows in files toV references but fromV doesn't, minus
+    * rows both sides re-wrote unchanged (multiset EXCEPT ALL both ways,
+    * so a compaction that rewrites identical rows into new files reports
+    * no changes) — plus the rows of carried files whose deletion vectors
+    * changed. Carried-over files are never opened: a small merge against
+    * a huge table diffs in time proportional to the rewrite, not the
+    * table. */
   def changesBetween(spark: SparkSession, root: String,
                      fromV: Int, toV: Int): (DataFrame, DataFrame) = {
     val (adds, rems, addsEmpty, remsEmpty) = diffSides(spark, root, fromV, toV)
@@ -5826,13 +5956,29 @@ object VersionedTable {
 
   /** The raw diff sides for `(fromV, toV]` plus their metadata-provable
     * emptiness — the shared front half of [[changesBetween]] and
-    * [[changelogBetween]]. */
+    * [[changelogBetween]]. A single-commit range whose commit wrote
+    * change files ([[mergeInto]]) takes its sides from them: post-images
+    * as adds, pre-images as rems, read under the commit's own schema and
+    * column mapping, with no removed or carried file opened. Every other
+    * range diffs
+    * the file sets: appends, merge-on-read DMLs (their vectors and added
+    * files already give the change), deletes, compaction, overwrite,
+    * rollback, multi-commit ranges. */
   private def diffSides(spark: SparkSession, root: String,
                         fromV: Int, toV: Int)
       : (DataFrame, DataFrame, Boolean, Boolean) = {
     require(fromV <= toV, s"changesBetween: from $fromV > to $toV")
     val a = readManifest(spark, root, fromV)
     val b = readManifest(spark, root, toV)
+    if (toV == fromV + 1 && b.changes.nonEmpty) {
+      // a side is a few small files, one per writing task, holding the
+      // merge's source rows or the target rows they matched — the bound
+      // materializeOnce already accepts: read each side in one task
+      val (pre, post) = b.changes.partition(isPreImage)
+      def side(fs: Seq[String]) =
+        readRawWithDefaults(spark, root, b, fs, b.partitionedRead).coalesce(1)
+      return (side(post), side(pre), post.isEmpty, pre.isEmpty)
+    }
     // both sides read under the TO-version schema: across an addColumn
     // boundary the pre-evolution rows surface NULL in the new column on
     // both sides, so carried-over data still cancels in the exceptAll.
@@ -5942,7 +6088,9 @@ object VersionedTable {
     * the two `exceptAll` outputs tagged and unioned, the d = 0
     * identical-image cancellation bucket (the compaction contract)
     * included. One-sided commits (pure appends, first deletes) keep the
-    * r18 aggregation-free fast path. */
+    * r18 aggregation-free fast path. A copy-on-write merge commit's sides
+    * are its change files ([[diffSides]]), so the aggregate reads only
+    * those. */
   private[graft] def changelogBetween(spark: SparkSession, root: String,
                                       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, when, abs => fabs}
@@ -6520,7 +6668,7 @@ object VersionedTable {
       if (keepLast == 0) math.max(1, versions(spark, root).size)
       else keepLast
     val (drop, _, keptManifests) = retentionPlan(spark, root, keep, f)
-    val live = keptManifests.flatMap(_.files).toSet
+    val live = keptManifests.flatMap(_.dataRefs).toSet
     val liveDv = keptManifests.flatMap(_.dvs.values.map(_.dvFile)).toSet
     val cloneLive = cloneProtected(spark, root, f)
     val now = System.currentTimeMillis()
@@ -6558,7 +6706,7 @@ object VersionedTable {
     require(keepLast >= 1, "must keep at least the newest version")
     val f = fs(spark, new Path(root))
     val (drop, keep, keptManifests) = retentionPlan(spark, root, keepLast, f)
-    val live = keptManifests.flatMap(_.files).toSet
+    val live = keptManifests.flatMap(_.dataRefs).toSet
     val liveDv = keptManifests.flatMap(_.dvs.values.map(_.dvFile)).toSet
     // delta chains must not dangle: any surviving version whose parent
     // this expire drops gets a full .checkpoint.json FIRST (assembled
@@ -6627,7 +6775,7 @@ object VersionedTable {
         if (vs2.isEmpty) { f.delete(mk, false); Seq.empty }
         else vs2.flatMap { v2 =>
           val m2 = readManifest(spark, dst, v2)
-          m2.files ++ m2.dvs.values.map(_.dvFile)
+          m2.dataRefs ++ m2.dvs.values.map(_.dvFile)
         }.filter(_.startsWith("/"))
       }.toSet
 
@@ -6670,7 +6818,7 @@ object VersionedTable {
   def orphanFiles(spark: SparkSession, root: String): Seq[(String, Long)] = {
     val f = fs(spark, new Path(root))
     val ms = versions(spark, root).map(v => readManifest(spark, root, v))
-    val live = ms.flatMap(_.files).toSet
+    val live = ms.flatMap(_.dataRefs).toSet
     val liveDv = ms.flatMap(_.dvs.values.map(_.dvFile)).toSet
     val cloneLive = cloneProtected(spark, root, f)
     def report(dir: Path, prefix: String, ref: Set[String]): Seq[(String, Long)] =

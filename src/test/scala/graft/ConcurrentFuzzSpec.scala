@@ -62,6 +62,9 @@ class ConcurrentFuzzSpec extends SparkSpec {
 
     def worker(t: Int): Thread = new Thread(() => {
       val rnd = new Random(Seed + t)
+      // a second stream for the copy-on-write re-merge below, so the
+      // main stream draws the same op schedule as without it
+      val cowRnd = new Random(Seed * 31 + t)
       var padName = s"pad$t"
       var k = 0
       // a full-row-image source aligned to the schema read at call
@@ -213,6 +216,12 @@ class ConcurrentFuzzSpec extends SparkSpec {
                 VersionedTable.mergeIntoVectored(spark, root,
                   fullRows(ids, col("id") * 3).coalesce(1), Seq("id"))
                 ids.foreach(appended.add)
+                // half the time, a copy-on-write merge then updates the
+                // same ids: a commit whose change rows are written at
+                // commit, pre-images included, for the CDF replay
+                if (cowRnd.nextBoolean())
+                  VersionedTable.mergeInto(spark, root,
+                    fullRows(ids, col("id") * 4).coalesce(1), Seq("id"))
               case 1 =>
                 val lo = 5000000L + t * 1000000L + k * 10L
                 val ids = Seq(lo, lo + 1)

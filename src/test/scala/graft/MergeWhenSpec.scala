@@ -262,4 +262,81 @@ class MergeWhenSpec extends SparkSpec {
       "WHEN MATCHED THEN DELETE")
     assert(!state(root).contains(2L))
   }
+
+  /** A table built from Scala primitives: every column NOT NULL. */
+  private def seedPrimitive(root: String): Unit =
+    VersionedTable.create(spark, root,
+      Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v").coalesce(1))
+
+  private def primState(root: String): Map[Long, Long] =
+    VersionedTable.read(spark, root).select("k", "v").as[(Long, Long)]
+      .collect().toMap
+
+  test("every merge face, CoW and vectored, merges into NOT NULL columns") {
+    val src = Seq((1L, 11L), (9L, 90L)).toDF("k", "v")
+    val want = Map(1L -> 11L, 2L -> 20L, 3L -> 30L, 9L -> 90L)
+    Seq(false, true).foreach { vectored =>
+      def fresh(): String = { val r = freshRoot(); seedPrimitive(r); r }
+      val r1 = fresh()
+      VersionedTable.mergeIntoWhen(spark, r1, src, Seq("k"), None,
+        Map("v" -> col("s.v")), Some(Map("k" -> col("s.k"), "v" -> col("s.v"))),
+        vectored = vectored)
+      assert(primState(r1) == want, s"mergeIntoWhen vectored=$vectored")
+      val r2 = fresh()
+      VersionedTable.mergeIntoWhenMulti(spark, r2, src, Seq("k"),
+        Seq(Some(col("s.v") > 100L) -> VersionedTable.MatchedDelete,
+          None -> VersionedTable.MatchedUpdate(Map("v" -> col("s.v")))),
+        Some(Map("k" -> col("s.k"), "v" -> col("s.v"))), vectored = vectored)
+      assert(primState(r2) == want, s"mergeIntoWhenMulti vectored=$vectored")
+      val r3 = fresh()
+      VersionedTable.mergeIntoWhenFull(spark, r3, src, Seq("k"),
+        Seq(None -> VersionedTable.MatchedUpdate(Map("v" -> col("s.v")))),
+        Seq(None -> Map("k" -> col("s.k"), "v" -> col("s.v"))),
+        bySource = Seq(Some(col("t.k") === 3L) ->
+          VersionedTable.MatchedUpdate(Map("v" -> (col("t.v") + 1L)))),
+        vectored = vectored)
+      assert(primState(r3) == want + (3L -> 31L),
+        s"mergeIntoWhenFull vectored=$vectored")
+      val r4 = fresh()
+      VersionedTable.mergeIntoEvolve(spark, r4, src, Seq("k"),
+        vectored = vectored)
+      assert(primState(r4) == want, s"mergeIntoEvolve vectored=$vectored")
+    }
+    val r5 = freshRoot(); seedPrimitive(r5)
+    spark.sql(s"""MERGE INTO '$r5' USING (
+        SELECT * FROM VALUES (1L, 11L), (9L, 90L) AS src(k, v)) ON (k)
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+    assert(primState(r5) == want, "SQL MERGE")
+    assert(VersionedTable.schemaOf(spark, r5).fields.forall(!_.nullable),
+      "the table keeps its NOT NULL columns")
+  }
+
+  test("a merge writing NULL into a NOT NULL column fails with NotNullViolation") {
+    Seq(false, true).foreach { vectored =>
+      val root = freshRoot(); seedPrimitive(root)
+      val src = Seq((1L, 11L), (9L, 90L)).toDF("k", "v")
+      // an insert that leaves v unlisted writes NULL into it
+      val e1 = intercept[VersionedTable.NotNullViolation] {
+        VersionedTable.mergeIntoWhen(spark, root, src, Seq("k"), None,
+          Map("v" -> col("s.v")), Some(Map("k" -> col("s.k"))),
+          vectored = vectored)
+      }
+      assert(e1.column == "v" && e1.getMessage.contains("NOT NULL column v"))
+      // an update assigning NULL only to a cond-false row passes; to a
+      // claimed row it fails
+      VersionedTable.mergeIntoWhen(spark, root, src, Seq("k"),
+        Some(col("s.v") > 100L), Map("v" -> lit(null).cast("bigint")), None,
+        vectored = vectored)
+      val before = VersionedTable.currentVersion(spark, root)
+      val e2 = intercept[VersionedTable.NotNullViolation] {
+        VersionedTable.mergeIntoWhen(spark, root, src, Seq("k"), None,
+          Map("v" -> lit(null).cast("bigint")), None, vectored = vectored)
+      }
+      assert(e2.column == "v")
+      assert(VersionedTable.currentVersion(spark, root) == before &&
+        primState(root) == Map(1L -> 10L, 2L -> 20L, 3L -> 30L),
+        "a failed merge commits nothing")
+    }
+  }
 }
