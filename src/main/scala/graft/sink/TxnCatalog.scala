@@ -67,11 +67,6 @@ object TxnCatalog {
   def currentTxn(spark: SparkSession, catRoot: String): Option[Int] =
     txns(spark, catRoot).lastOption
 
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
   /** The consistent snapshot a txn published ([[currentTxn]] when `txn`
     * is None). Every read through this map is pinned — immune to any
     * table commit that happened after the transaction. */
@@ -85,11 +80,7 @@ object TxnCatalog {
     val in = f.open(p)
     val text = try new String(
       org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val entry =
-      """"((?:[^"\\]|\\.)+)": \{"root": "((?:[^"\\]|\\.)*)", "version": (\d+)\}""".r
-    Snapshot(n, entry.findAllMatchIn(text).map { m =>
-      unesc(m.group(1)) -> (unesc(m.group(2)), m.group(3).toInt)
-    }.toMap)
+    Snapshot(n, ManifestJson.txnTables(p.toString, text))
   }
 
   /** One table of a snapshot, as the pinned-version frame. */
@@ -157,18 +148,14 @@ object TxnCatalog {
       val prev = cur.map(n => snapshot(spark, catRoot, Some(n)).tables)
         .getOrElse(Map.empty)
       val next = cur.getOrElse(0) + 1
-      val merged = prev ++ updates
-      val body = merged.toSeq.sortBy(_._1).map { case (t, (root, v)) =>
-        s""""${esc(t)}": {"root": "${esc(root)}", "version": $v}"""
-      }.mkString(", ")
-      val json = s"""{"txn": $next, "tables": {$body}}"""
+      val json = ManifestJson.txn(next, prev ++ updates)
       val target = txnPath(catRoot, next)
       val f = fs(spark, target)
       f.mkdirs(logDir(catRoot))
       val tmp = new Path(logDir(catRoot),
         s".t$next-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
       val out = f.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
+      try out.write(json) finally out.close()
       onBeforeClaim(next)
       if (VersionedTable.atomicClaim(f, tmp, target)) return next
       // lost the claim: disjoint winner → rebase (its pins are carried

@@ -211,13 +211,13 @@ object VersionedTable {
     * mixed-provenance stamps always yield a monotone sequence and every
     * consumer resolves a total order. */
   def commitTimestamps(spark: SparkSession, root: String): Seq[(Int, Long)] = {
-    // the stamp is self-contained in EVERY manifest's raw text (full
-    // and delta alike), so this is one readText + one regex per
-    // version — never a delta-chain replay or a stats parse
+    // the stamp is self-contained in EVERY manifest (full and delta
+    // alike), so this is one decode per version — never a delta-chain
+    // replay
     val f = fs(spark, new Path(root))
     val raw = history(spark, root).map { case (v, mtime) =>
       val ts = scala.util.Try(
-        parseTs(readText(f, manifestPath(root, v)))).getOrElse(0L)
+        readDoc(f, manifestPath(root, v), v)._1.ts).getOrElse(0L)
       v -> (if (ts > 0L) ts else mtime)
     }
     // MONOTONIZE over version order (Delta's commit-timestamp
@@ -373,7 +373,7 @@ object VersionedTable {
     * the snapshot and roll back with [[rollback]]. */
   final case class TableCheck(name: String, expr: String)
 
-  private case class Manifest(version: Int, schemaDdl: String, files: Seq[String],
+  private[sink] case class Manifest(version: Int, schemaDdl: String, files: Seq[String],
                               txn: Option[Long] = None,
                               stats: Map[String, Seq[ColStat]] = Map.empty,
                               blooms: Map[String, Seq[FileBloom]] = Map.empty,
@@ -446,256 +446,8 @@ object VersionedTable {
     }
   }
 
-  // Minimal JSON (de)serialization — file names are commit-generated
-  // (uuid-free parquet part names under our own prefix, no escapes
-  // needed); the schema DDL is JSON-escaped.
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-  private def unesc(s: String): String = {
-    val b = new StringBuilder; var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\\' if i + 1 < s.length =>
-          s(i + 1) match {
-            case 'n' => b += '\n'; i += 2
-            case 'u' => b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-            case c => b += c; i += 2
-          }
-        case c => b += c; i += 1
-      }
-    }
-    b.toString
-  }
-
-  /** The shared per-file-metadata tail of a manifest JSON: stats as a
-    * FLAT array of {file, col, t, lo, hi} objects (regex-parseable
-    * without a nesting-aware parser), blooms / HLL registers / deletion
-    * vectors in the same flat-object discipline, each field omitted
-    * entirely when empty. Full manifests serialize every file's
-    * metadata; delta manifests only the touched files'. */
-  private def perFileJson(stats: Map[String, Seq[ColStat]],
-                          blooms: Map[String, Seq[FileBloom]],
-                          hlls: Map[String, Seq[FileHll]],
-                          dvs: Map[String, FileDv],
-                          rows: Map[String, Long],
-                          noCol: Map[String, Seq[String]] = Map.empty): String = {
-    val statsJson = stats.toSeq.sortBy(_._1).flatMap { case (file, cs) =>
-      cs.map { c =>
-        val nn = if (c.nulls >= 0) s""", "nn": ${c.nulls}""" else ""
-        val u = if (c.unit.nonEmpty) s""", "u": "${c.unit}"""" else ""
-        val lv = if (c.live) """, "lv": true""" else ""
-        val sm = c.sum.map(v => s""", "sm": $v""").getOrElse("")
-        s"""{"file": "${esc(file)}", "col": "${esc(c.col)}", """ +
-          s""""t": "${c.typ}", "lo": "${esc(c.lo)}", "hi": "${esc(c.hi)}"$nn$u$lv$sm}"""
-      }
-    }.mkString("[", ", ", "]")
-    val rowsJson =
-      if (rows.isEmpty) ""
-      else ",\n \"nrows\": " + rows.toSeq.sortBy(_._1).map {
-        case (file, n) => s"""{"rfile": "${esc(file)}", "n": $n}"""
-      }.mkString("[", ", ", "]")
-    val bloomsJson =
-      if (blooms.isEmpty) ""
-      else ",\n \"blooms\": " + blooms.toSeq.sortBy(_._1).flatMap {
-        case (file, bs) => bs.map(b =>
-          s"""{"bfile": "${esc(file)}", "bcol": "${esc(b.col)}", """ +
-            s""""m": ${b.mBits}, "k": ${b.k}, "bits": "${b.bits}"}""")
-      }.mkString("[", ", ", "]")
-    val hllsJson =
-      if (hlls.isEmpty) ""
-      else ",\n \"hlls\": " + hlls.toSeq.sortBy(_._1).flatMap {
-        case (file, hs) => hs.map(h =>
-          s"""{"hfile": "${esc(file)}", "hcol": "${esc(h.col)}", """ +
-            s""""hm": ${h.m}, "regs": "${h.regs}"}""")
-      }.mkString("[", ", ", "]")
-    val dvsJson =
-      if (dvs.isEmpty) ""
-      else ",\n \"dvs\": " + dvs.toSeq.sortBy(_._1).map {
-        case (file, d) =>
-          s"""{"vfile": "${esc(file)}", "dv": "${esc(d.dvFile)}", """ +
-            s""""card": ${d.card}}"""
-      }.mkString("[", ", ", "]")
-    val noColJson =
-      if (noCol.isEmpty) ""
-      else ",\n \"nocol\": " + noCol.toSeq.sortBy(_._1).map {
-        case (file, cs) =>
-          s"""{"ncfile": "${esc(file)}", "nccols": [${cs
-            .map(c => "\"" + esc(c) + "\"").mkString(", ")}]}"""
-      }.mkString("[", ", ", "]")
-    s""""stats": $statsJson$bloomsJson$hllsJson$dvsJson$rowsJson$noColJson"""
-  }
-
-  private def tsField(m: Manifest): String =
-    if (m.ts <= 0L) "" else s""" "cts": ${m.ts},\n"""
-
-  /** COPY INTO's ingested-source-file field — absent when the commit
-    * loaded nothing, per-commit like op/txn (the ledger is the UNION
-    * over live manifests; expired history forgets its loads — the same
-    * retention caveat Delta's COPY INTO state carries). */
-  private def loadsField(m: Manifest): String =
-    if (m.loads.isEmpty) ""
-    else s""" "loads": [${m.loads.map(f => "\"" + esc(f) + "\"")
-      .mkString(", ")}],\n"""
-
-  /** The commit's change-row files field — absent unless the commit
-    * wrote some. */
-  private def changesField(m: Manifest): String =
-    if (m.changes.isEmpty) ""
-    else s""" "changes": [${m.changes.map(f => "\"" + esc(f) + "\"")
-      .mkString(", ")}],\n"""
-
-  private def parseTs(text: String): Long =
-    """"cts": (\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toLong).getOrElse(0L)
-
-  private def fullManifestJson(m: Manifest): String = {
-    val txnField = m.txn.map(t => s""" "txn": $t,\n""").getOrElse("")
-    val opField =
-      if (m.op.isEmpty) "" else s""" "op": "${esc(m.op)}",\n"""
-    // hive-partitioned layout flag: the reader needs it to resolve
-    // partition-column values from the data-file directory names
-    val partsField =
-      if (m.partitionCols.isEmpty) ""
-      else s""" "partitionCols": [${m.partitionCols
-        .map(c => "\"" + esc(c) + "\"").mkString(", ")}],\n"""
-    s"""{"version": ${m.version},
-       |$opField$txnField${tsField(m)}${loadsField(m)}${changesField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
-       | "files": [${m.files.map(f => "\"" + f + "\"").mkString(", ")}],
-       | ${perFileJson(m.stats, m.blooms, m.hlls, m.dvs, m.rows, m.noCol)}}""".stripMargin
-  }
-
-  /** CHECK-constraints JSON field — absent when the table has none, so
-    * unconstrained manifests are byte-identical. Emitted in BOTH full
-    * and delta manifests (like the column mapping), so every manifest
-    * is self-contained and parse needs no inheritance walk. */
-  private def checksJson(m: Manifest): String =
-    if (m.checks.isEmpty) ""
-    else s""" "checks": [${m.checks.map(c =>
-      s"""{"kname": "${esc(c.name)}", "kexpr": "${esc(c.expr)}"}""")
-      .mkString(", ")}],\n"""
-
-  private def parseChecks(text: String): Seq[TableCheck] = {
-    val C = """\{"kname": "((?:[^"\\]|\\.)*)", "kexpr": "((?:[^"\\]|\\.)*)"\}""".r
-    C.findAllMatchIn(text).map(m =>
-      TableCheck(unesc(m.group(1)), unesc(m.group(2)))).toSeq
-  }
-
-  /** Column DEFAULT values JSON field — absent when the table has
-    * none. Emitted in BOTH full and delta manifests (like checks), so
-    * every manifest is self-contained. */
-  private def defaultsJson(m: Manifest): String =
-    if (m.defaults.isEmpty) ""
-    else s""" "defaults": [${m.defaults.toSeq.sortBy(_._1).map { case (c, e) =>
-      s"""{"dname": "${esc(c)}", "dexpr": "${esc(e)}"}""" }
-      .mkString(", ")}],\n"""
-
-  private def parseDefaults(text: String): Map[String, String] = {
-    val D = """\{"dname": "((?:[^"\\]|\\.)*)", "dexpr": "((?:[^"\\]|\\.)*)"\}""".r
-    D.findAllMatchIn(text).map(m =>
-      unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-
-  /** GENERATED-columns JSON field — absent when the table has none.
-    * Emitted in BOTH full and delta manifests (like checks/defaults),
-    * so every manifest is self-contained. */
-  private def gensJson(m: Manifest): String =
-    if (m.gens.isEmpty) ""
-    else s""" "gens": [${m.gens.toSeq.sortBy(_._1).map { case (c, e) =>
-      s"""{"gname": "${esc(c)}", "gexpr": "${esc(e)}"}""" }
-      .mkString(", ")}],\n"""
-
-  private def parseGens(text: String): Map[String, String] = {
-    val G = """\{"gname": "((?:[^"\\]|\\.)*)", "gexpr": "((?:[^"\\]|\\.)*)"\}""".r
-    G.findAllMatchIn(text).map(m =>
-      unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-
-  /** IDENTITY-columns JSON field (column → next value to assign) —
-    * absent when the table has none; self-contained in every manifest
-    * like checks/defaults/gens. */
-  private def idsJson(m: Manifest): String =
-    if (m.ids.isEmpty) ""
-    else s""" "ids": [${m.ids.toSeq.sortBy(_._1).map { case (c, hw) =>
-      s"""{"iname": "${esc(c)}", "ihw": $hw}""" }
-      .mkString(", ")}],\n"""
-
-  private def parseIds(text: String): Map[String, Long] = {
-    val I = """\{"iname": "((?:[^"\\]|\\.)*)", "ihw": (-?\d+)\}""".r
-    I.findAllMatchIn(text).map(m =>
-      unesc(m.group(1)) -> m.group(2).toLong).toMap
-  }
-
-  /** TABLE-PROPERTIES JSON field (key → value; the Delta/Iceberg
-    * tblproperties analog — row tracking, clustering keys, user
-    * metadata) — absent when the table has none; self-contained in
-    * every manifest like checks/defaults/gens/ids. */
-  private def propsJson(m: Manifest): String =
-    if (m.props.isEmpty) ""
-    else s""" "props": [${m.props.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"""{"pkey": "${esc(k)}", "pval": "${esc(v)}"}""" }
-      .mkString(", ")}],\n"""
-
-  private def parseProps(text: String): Map[String, String] = {
-    val P = """\{"pkey": "((?:[^"\\]|\\.)*)", "pval": "((?:[^"\\]|\\.)*)"\}""".r
-    P.findAllMatchIn(text).map(m =>
-      unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-
-  /** Column-mapping JSON field — absent entirely until mapping
-    * activates, so pre-mapping manifests are byte-identical. */
-  private def colMapJson(m: Manifest): String =
-    if (m.colMap.isEmpty) ""
-    else s""" "maxcid": ${m.maxCid}, "colmap": [${m.colMap.map { f =>
-      val priorField =
-        if (f.prior.isEmpty) ""
-        else s""", "cprior": [${f.prior.map(p => "\"" + esc(p) + "\"")
-          .mkString(", ")}]"""
-      s"""{"cid": ${f.id}, "cname": "${esc(f.name)}", "cphys": "${esc(f.phys)}"$priorField}"""
-    }.mkString(", ")}],\n"""
-
-  /** `m` as a DELTA against its parent snapshot `p`: removed file
-    * entries, appended ones, and the metadata of exactly the files this
-    * commit added or touched (whose stats/blooms/registers/vectors
-    * differ from the parent's). None when the delta encoding cannot
-    * reproduce `m` exactly — wrong parent version, or a file order the
-    * remove-then-append replay would not recreate (rollback) — in which
-    * case the caller writes a full manifest. */
-  private def deltaManifestJson(m: Manifest, p: Manifest): Option[String] = {
-    if (p.version + 1 != m.version) return None
-    val pset = p.files.toSet
-    val mset = m.files.toSet
-    val removes = p.files.filterNot(mset)
-    val adds = m.files.filterNot(pset)
-    if (p.files.filterNot(removes.toSet) ++ adds != m.files) return None
-    val touch = m.files.filter(pset).filter(f =>
-      m.stats.get(f) != p.stats.get(f) || m.blooms.get(f) != p.blooms.get(f) ||
-        m.hlls.get(f) != p.hlls.get(f) || m.dvs.get(f) != p.dvs.get(f) ||
-        m.rows.get(f) != p.rows.get(f) || m.noCol.get(f) != p.noCol.get(f))
-    val sel = (touch ++ adds).toSet
-    def sub[T](mm: Map[String, T]): Map[String, T] =
-      mm.view.filterKeys(sel).toMap
-    val txnField = m.txn.map(t => s""" "txn": $t,\n""").getOrElse("")
-    val opField =
-      if (m.op.isEmpty) "" else s""" "op": "${esc(m.op)}",\n"""
-    val partsField =
-      if (m.partitionCols.isEmpty) ""
-      else s""" "partitionCols": [${m.partitionCols
-        .map(c => "\"" + esc(c) + "\"").mkString(", ")}],\n"""
-    def names(fs: Seq[String]) = fs.map(f => "\"" + f + "\"").mkString(", ")
-    Some(
-      s"""{"version": ${m.version},
-         | "delta": true,
-         |$opField$txnField${tsField(m)}${loadsField(m)}${changesField(m)}$partsField${colMapJson(m)}${checksJson(m)}${defaultsJson(m)}${gensJson(m)}${idsJson(m)}${propsJson(m)} "schema": "${esc(m.schemaDdl)}",
-         | "removes": [${names(removes)}],
-         | "adds": [${names(adds)}],
-         | "touch": [${names(touch)}],
-         | ${perFileJson(sub(m.stats), sub(m.blooms), sub(m.hlls), sub(m.dvs),
-                         sub(m.rows), sub(m.noCol))}}"""
-        .stripMargin)
-  }
+  // Manifest JSON is [[ManifestJson]]: version, per-commit fields, table
+  // metadata, schema, the file list and flat per-file metadata arrays.
 
   private def writeManifest(spark: SparkSession, root: String, m0: Manifest,
                             parent: Option[Manifest] = None): Unit = {
@@ -716,8 +468,8 @@ object VersionedTable {
     // bounded by the checkpoint spacing
     val json = parent match {
       case Some(p) if m.version % CheckpointEvery != 0 =>
-        deltaManifestJson(m, p).getOrElse(fullManifestJson(m))
-      case _ => fullManifestJson(m)
+        ManifestJson.delta(m, p).getOrElse(ManifestJson.full(m))
+      case _ => ManifestJson.full(m)
     }
     val target = manifestPath(root, m.version)
     val f = fs(spark, target)
@@ -727,7 +479,7 @@ object VersionedTable {
     val tmp = new Path(logDir(root),
       s".v${m.version}-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(json) finally out.close()
     // The atomic publish: claim the manifest name with a primitive that
     // fails-if-exists ATOMICALLY. On local filesystems Hadoop rename
     // bottoms out in POSIX rename(2), which silently REPLACES an existing
@@ -887,138 +639,16 @@ object VersionedTable {
     claimed
   }
 
-  /** The scalar fields + per-file metadata shared by full and delta
-    * manifest JSON. */
-  private def parseCommon(text: String): (String, Option[Long], Seq[String],
-      Map[String, Seq[ColStat]], Map[String, Seq[FileBloom]],
-      Map[String, Seq[FileHll]], Map[String, FileDv], Map[String, Long],
-      Map[String, Seq[String]]) = {
-    val schema = """"schema": "((?:[^"\\]|\\.)*)"""".r
-      .findFirstMatchIn(text).map(m => unesc(m.group(1))).getOrElse("")
-    val txn = """"txn": (\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-    // quote-aware (NOT comma-split): a layout TRANSFORM entry like
-    // `bucket(4, id)` legally contains a comma — splitting on it
-    // re-parses the committed layout as corrupt fragments ('bucket(4')
-    // and every later write fails at Layout.parse
-    val partitionCols = parseQuotedList(text, "partitionCols")
-    val S = """\{"file": "((?:[^"\\]|\\.)*)", "col": "((?:[^"\\]|\\.)*)", "t": "(\w+)", "lo": "((?:[^"\\]|\\.)*)", "hi": "((?:[^"\\]|\\.)*)"(?:, "nn": (\d+))?(?:, "u": "([\w-]+)")?(?:, "lv": (true))?(?:, "sm": (-?\d+))?\}""".r
-    val stats = S.findAllMatchIn(text).map { mm =>
-      (unesc(mm.group(1)), ColStat(unesc(mm.group(2)), mm.group(3),
-        unesc(mm.group(4)), unesc(mm.group(5)),
-        Option(mm.group(6)).map(_.toLong).getOrElse(-1L),
-        Option(mm.group(7)).getOrElse(""),
-        mm.group(8) != null,
-        Option(mm.group(9)).map(_.toLong)))
-    }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val B = """\{"bfile": "((?:[^"\\]|\\.)*)", "bcol": "((?:[^"\\]|\\.)*)", "m": (\d+), "k": (\d+), "bits": "([A-Za-z0-9+/=]*)"\}""".r
-    val blooms = B.findAllMatchIn(text).map { mm =>
-      (unesc(mm.group(1)), FileBloom(unesc(mm.group(2)), mm.group(3).toInt,
-        mm.group(4).toInt, mm.group(5)))
-    }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val H = """\{"hfile": "((?:[^"\\]|\\.)*)", "hcol": "((?:[^"\\]|\\.)*)", "hm": (\d+), "regs": "([A-Za-z0-9+/=]*)"\}""".r
-    val hlls = H.findAllMatchIn(text).map { mm =>
-      (unesc(mm.group(1)), FileHll(unesc(mm.group(2)), mm.group(3).toInt,
-        mm.group(4)))
-    }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val D = """\{"vfile": "((?:[^"\\]|\\.)*)", "dv": "((?:[^"\\]|\\.)*)", "card": (\d+)\}""".r
-    val dvs = D.findAllMatchIn(text).map { mm =>
-      unesc(mm.group(1)) -> FileDv(unesc(mm.group(2)), mm.group(3).toLong)
-    }.toMap
-    val R = """\{"rfile": "((?:[^"\\]|\\.)*)", "n": (\d+)\}""".r
-    val rows = R.findAllMatchIn(text).map { mm =>
-      unesc(mm.group(1)) -> mm.group(2).toLong
-    }.toMap
-    val NC = """\{"ncfile": "((?:[^"\\]|\\.)*)", "nccols": \[([^\]]*)\]\}""".r
-    val noCol = NC.findAllMatchIn(text).map { mm =>
-      unesc(mm.group(1)) -> mm.group(2).split(",").map(_.trim
-        .stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-        .map(unesc).toSeq
-    }.toMap
-    (schema, txn, partitionCols, stats, blooms, hlls, dvs, rows, noCol)
-  }
-
-  private def parseNameList(text: String, field: String): Seq[String] =
-    (""""""" + field + """": \[([^\]]*)\]""").r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse("")
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-
-  /** The QUOTE-AWARE string-list parse (never comma-split): for fields
-    * whose entries legally contain ',' / ']' / '"' — `loads` carries
-    * USER-supplied source URIs (a path like `dir/a,b.csv` under a
-    * comma-split re-parses as corrupt fragments, the ledger never
-    * matches the file again, and every COPY INTO re-run silently
-    * re-ingests it) and `partitionCols` carries layout TRANSFORMS
-    * (`bucket(4, id)` would split into 'bucket(4' and every later
-    * write fail at Layout.parse). One shared construction so the two
-    * parses can never diverge on the quoting rules. */
-  private def parseQuotedList(text: String, field: String): Seq[String] = {
-    val body = (""""""" + field +
-      """": \[((?:"(?:[^"\\]|\\.)*"(?:, )?)*)\]""").r
-      .findFirstMatchIn(text).map(_.group(1)).getOrElse("")
-    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body)
-      .map(m => unesc(m.group(1))).toSeq
-  }
-
-  private def parseLoads(text: String): Seq[String] =
-    parseQuotedList(text, "loads")
-
-  private def parseOp(text: String): String =
-    """"op": "((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text)
-      .map(m => unesc(m.group(1))).getOrElse("")
-
-  private def parseColMap(text: String): (Seq[FieldMap], Int) = {
-    val Q = """"((?:[^"\\]|\\.)*)"""".r
-    val C = ("""\{"cid": (\d+), "cname": "((?:[^"\\]|\\.)*)", """ +
-      """"cphys": "((?:[^"\\]|\\.)*)"""" +
-      """(?:, "cprior": \[((?:"(?:[^"\\]|\\.)*"(?:, )?)*)\])?\}""").r
-    val cm = C.findAllMatchIn(text).map(m =>
-      FieldMap(m.group(1).toInt, unesc(m.group(2)), unesc(m.group(3)),
-        Option(m.group(4)).toSeq.flatMap(ps =>
-          Q.findAllMatchIn(ps).map(q => unesc(q.group(1))).toSeq))).toSeq
-    val maxCid = """"maxcid": (\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toInt).getOrElse(0)
-    (cm, maxCid)
-  }
-
-  private def parseFullManifest(v: Int, text: String): Manifest = {
-    val (schema, txn, partitionCols, stats, blooms, hlls, dvs, rows, noCol) =
-      parseCommon(text)
-    val (cm, maxCid) = parseColMap(text)
-    Manifest(v, schema, parseNameList(text, "files"), txn, stats, blooms,
-      partitionCols, hlls, dvs, rows, parseOp(text), cm, maxCid,
-      parseChecks(text), parseDefaults(text), noCol, parseGens(text),
-      parseIds(text), parseProps(text), parseTs(text), parseLoads(text),
-      parseQuotedList(text, "changes"))
-  }
-
-  /** Replay a delta manifest over its parent snapshot: removed entries
-    * drop (with their metadata), added entries append in recorded order,
-    * and a touched-or-added file's metadata is REPLACED by exactly what
-    * the delta carries. */
-  private def applyDeltaManifest(v: Int, text: String, parent: Manifest): Manifest = {
-    val (schema, txn, partitionCols, stats, blooms, hlls, dvs, rows, noCol) =
-      parseCommon(text)
-    val removes = parseNameList(text, "removes").toSet
-    val adds = parseNameList(text, "adds")
-    val sel = (parseNameList(text, "touch") ++ adds).toSet
-    def merge[T](pm: Map[String, T], dm: Map[String, T]): Map[String, T] =
-      (pm -- removes -- sel) ++ dm
-    val (cm, maxCid) = parseColMap(text)
-    Manifest(v, schema, parent.files.filterNot(removes) ++ adds, txn,
-      merge(parent.stats, stats), merge(parent.blooms, blooms),
-      partitionCols, merge(parent.hlls, hlls), merge(parent.dvs, dvs),
-      merge(parent.rows, rows), parseOp(text), cm, maxCid,
-      parseChecks(text), parseDefaults(text), merge(parent.noCol, noCol),
-      parseGens(text), parseIds(text), parseProps(text), parseTs(text),
-      parseLoads(text), parseQuotedList(text, "changes"))
-  }
-
   private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
     finally in.close()
   }
+
+  /** The manifest or checkpoint at `p`, decoded as version `v`. */
+  private def readDoc(f: FileSystem, p: Path, v: Int)
+      : (Manifest, Option[ManifestJson.Delta]) =
+    ManifestJson.decode(p.toString, v, readText(f, p))
 
   private def readManifest(spark: SparkSession, root: String, v: Int): Manifest = {
     val p = manifestPath(root, v)
@@ -1032,27 +662,26 @@ object VersionedTable {
       }
     val key = cacheKey(f, p, st)
     cacheGet(key).getOrElse {
-      val text = readText(f, p)
-      val m =
-        if (!text.contains("\"delta\": true")) parseFullManifest(v, text)
-        else {
+      val m = readDoc(f, p, v) match {
+        case (full, None) => full
+        case (d, Some(delta)) =>
           // a checkpoint (written by expire when it drops a delta's
           // ancestors) REPLACES the replay: same assembled content.
           // Probed only on the cache-miss delta path, so the common
           // full-manifest read pays nothing for it.
           val ck = checkpointPath(root, v)
-          if (f.exists(ck)) parseFullManifest(v, readText(f, ck))
-          else try applyDeltaManifest(v, text, readManifest(spark, root, v - 1))
+          if (f.exists(ck)) readDoc(f, ck, v)._1
+          else try delta.replay(d, readManifest(spark, root, v - 1))
           catch {
             // a CONCURRENT expire can drop this delta's parent after our
             // no-checkpoint probe but before the recursion reads it — and
             // expire always writes the checkpoint FIRST, so re-probing
             // closes the window for a version expire deliberately kept
             case e: IllegalArgumentException =>
-              if (f.exists(ck)) parseFullManifest(v, readText(f, ck))
+              if (f.exists(ck)) readDoc(f, ck, v)._1
               else throw e
           }
-        }
+      }
       cachePut(key, m)
       m
     }
@@ -1066,7 +695,7 @@ object VersionedTable {
     val tmp = new Path(logDir(root),
       s".ck${m.version}-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = f.create(tmp, true)
-    try out.write(fullManifestJson(m).getBytes("UTF-8")) finally out.close()
+    try out.write(ManifestJson.full(m)) finally out.close()
     if (!f.rename(tmp, target)) f.delete(tmp, false) // an existing one is fine
   }
 
@@ -5200,7 +4829,7 @@ object VersionedTable {
     val deletes = matDel.map(_._1)
     try {
     val m = readManifest(spark, root, cur)
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax, col,
+    import org.apache.spark.sql.functions.{max => fmax, col,
       coalesce, lit, monotonically_increasing_id, when, struct}
     // Row tracking, SAME contract as the vectored path: a business
     // source WITHOUT _row_id gets it engine-filled — matched keys
@@ -5222,17 +4851,8 @@ object VersionedTable {
         .unionByName(d.select(keys.map(col): _*))
       case None => source.select(keys.map(col): _*)
     }
-    // touched-key bounds -> range preds, only for stats-comparable domains
-    val aggCols = keys.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
-    val bounds = allKeys.agg(aggCols.head, aggCols.tail: _*).head
-    val preds: RangePreds = keys.zipWithIndex.flatMap { case (k, i) =>
-      (bounds.get(2 * i), bounds.get(2 * i + 1)) match {
-        case (lo: Any, hi: Any) if lo.isInstanceOf[Number] || lo.isInstanceOf[String] =>
-          Some(k -> (Some(lo), Some(hi)))
-        case _ => None // null or non-stats type: no safe pruning on this key
-      }
-    }.toMap
-    val touched = prunedFiles(spark, root, preds, Some(cur)).toSet
+    val touched =
+      prunedFiles(spark, root, keyRangePreds(allKeys, keys), Some(cur)).toSet
     val schemaFields = org.apache.spark.sql.types.StructType
       .fromDDL(m.schemaDdl).fieldNames.toSeq
     val source2 =
@@ -5308,7 +4928,7 @@ object VersionedTable {
     val deletes = matDel.map(_._1)
     try {
     val m = readManifest(spark, root, cur)
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax, col,
+    import org.apache.spark.sql.functions.{col,
       coalesce, lit, monotonically_increasing_id, max => fmax2}
     // Row tracking: a source WITHOUT _row_id gets it engine-filled —
     // matched keys PRESERVE the current row's id (one lookup join over
@@ -5335,16 +4955,8 @@ object VersionedTable {
         .unionByName(d.select(keys.map(col): _*))
       case None => source.select(keys.map(col): _*)
     }
-    val aggCols = keys.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
-    val bounds = allKeys.agg(aggCols.head, aggCols.tail: _*).head
-    val preds: RangePreds = keys.zipWithIndex.flatMap { case (k, i) =>
-      (bounds.get(2 * i), bounds.get(2 * i + 1)) match {
-        case (lo: Any, hi: Any) if lo.isInstanceOf[Number] || lo.isInstanceOf[String] =>
-          Some(k -> (Some(lo), Some(hi)))
-        case _ => None
-      }
-    }.toMap
-    val touched = prunedFiles(spark, root, preds, Some(cur))
+    val touched =
+      prunedFiles(spark, root, keyRangePreds(allKeys, keys), Some(cur))
     val schemaFields = org.apache.spark.sql.types.StructType
       .fromDDL(m.schemaDdl).fieldNames.toSeq
     val source2 =
@@ -5490,8 +5102,7 @@ object VersionedTable {
                         bySource: Seq[(Option[org.apache.spark.sql.Column], MatchedAction)] = Seq.empty,
                         vectored: Boolean = true,
                         txn: Option[Long] = None): Int = {
-    import org.apache.spark.sql.functions.{col, lit, when,
-      min => fmin, max => fmax}
+    import org.apache.spark.sql.functions.{col, lit, when}
     require(keys.nonEmpty, "merge needs at least one key column")
     require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
@@ -5549,18 +5160,8 @@ object VersionedTable {
     // matched slice: stats-sound — every possible match lives in the
     // key-range-pruned files (same bounds the apply pass prunes by)
     lazy val tgt = {
-      val aggCols = keys.flatMap(k => Seq(fmin(col(k)), fmax(col(k))))
-      val bounds = source.select(keys.map(col): _*)
-        .agg(aggCols.head, aggCols.tail: _*).head
-      val preds: RangePreds = keys.zipWithIndex.flatMap { case (k, i) =>
-        (bounds.get(2 * i), bounds.get(2 * i + 1)) match {
-          case (lo: Any, hi: Any)
-            if lo.isInstanceOf[Number] || lo.isInstanceOf[String] =>
-            Some(k -> (Some(lo), Some(hi)))
-          case _ => None
-        }
-      }.toMap
-      val touched = prunedFiles(spark, root, preds, Some(cur))
+      val touched = prunedFiles(spark, root,
+        keyRangePreds(source.select(keys.map(col): _*), keys), Some(cur))
       readSnapshotFiles(spark, root, m, touched).alias("t")
     }
     val src = source.alias("s")
@@ -5700,6 +5301,13 @@ object VersionedTable {
     }
     } finally releaseSrc()
   }
+
+  /** A table-log file (manifest, checkpoint or txn file) at `path` that
+    * is not a log document: not a JSON object, or a field it needs is
+    * missing or of the wrong type. */
+  final class CorruptManifestException(val path: String, reason: String,
+                                       cause: Throwable = null)
+      extends java.io.IOException(s"corrupt table log file $path: $reason", cause)
 
   /** A MERGE wrote NULL into NOT NULL column `column`; nothing was
     * committed. */
@@ -6716,7 +6324,7 @@ object VersionedTable {
     keep.zip(keptManifests).foreach { case (v, mm) =>
       if (v > 1 && !keepSet.contains(v - 1) &&
         !f.exists(checkpointPath(root, v)) &&
-        readText(f, manifestPath(root, v)).contains("\"delta\": true"))
+        readDoc(f, manifestPath(root, v), v)._2.nonEmpty)
         writeCheckpoint(spark, root, mm)
     }
     drop.foreach { v =>

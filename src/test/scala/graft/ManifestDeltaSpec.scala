@@ -27,8 +27,13 @@ class ManifestDeltaSpec extends SparkSpec {
     frame.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
   private def manifestText(root: String, v: Int): String =
-    new String(Files.readAllBytes(
-      Paths.get(root, "_log", f"v$v%08d.manifest.json")), "UTF-8")
+    new String(Files.readAllBytes(manifestPath(root, v)), "UTF-8")
+
+  private def manifestPath(root: String, v: Int) =
+    Paths.get(root, "_log", f"v$v%08d.manifest.json")
+
+  private def isDelta(root: String, v: Int): Boolean =
+    LogDocs.isDelta(manifestPath(root, v))
 
   test("appends between checkpoints write deltas that OMIT carried files") {
     val root = freshRoot()
@@ -38,7 +43,7 @@ class ManifestDeltaSpec extends SparkSpec {
     val v1Files = VersionedTable.filesOf(spark, root, Some(1))
     val t2 = manifestText(root, 2)
     val t3 = manifestText(root, 3)
-    assert(t2.contains("\"delta\": true") && t3.contains("\"delta\": true"))
+    assert(isDelta(root, 2) && isDelta(root, 3))
     // the carried v1 file never reappears in a delta — THE size property
     assert(!t2.contains(v1Files.head.split('/').last))
     assert(!t3.contains(v1Files.head.split('/').last))
@@ -54,11 +59,10 @@ class ManifestDeltaSpec extends SparkSpec {
     (2 to VersionedTable.CheckpointEvery + 1).foreach(i =>
       VersionedTable.append(spark, root, df(i.toLong)))
     val full = manifestText(root, VersionedTable.CheckpointEvery)
-    assert(!full.contains("\"delta\": true"),
+    assert(!isDelta(root, VersionedTable.CheckpointEvery),
       s"v${VersionedTable.CheckpointEvery} must be a full checkpoint manifest")
     assert(full.contains("\"files\""))
-    assert(manifestText(root, VersionedTable.CheckpointEvery + 1)
-      .contains("\"delta\": true"))
+    assert(isDelta(root, VersionedTable.CheckpointEvery + 1))
     // replay across the whole mixed chain
     assert(idsOf(VersionedTable.read(spark, root)) ==
       (1L to (VersionedTable.CheckpointEvery + 1).toLong))

@@ -132,10 +132,8 @@ class MetaAggregateSpec extends SparkSpec {
     VersionedTable.create(spark, root, (0L until 40L).toDF("id"))
     // simulate a manifest written before the nrows field existed
     val mf = java.nio.file.Paths.get(root, "_log", "v00000001.manifest.json")
-    val txt = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-    assert(txt.contains("\"nrows\""), "new commits must record row counts")
-    java.nio.file.Files.write(mf,
-      txt.replaceAll(""",\s*"nrows": \[[^\]]*\]""", "").getBytes("UTF-8"))
+    assert(LogDocs.read(mf).has("nrows"), "new commits must record row counts")
+    LogDocs.edit(mf)(_.remove("nrows"))
     assert(VersionedTable.metaRowCount(spark, root).isEmpty)
     val c = rel(root).groupBy().agg(count(lit(1)).as("n"))
     assert(!metaAnswered(c), "missing nrows must fall back to the scan")
@@ -367,10 +365,11 @@ class MetaAggregateSpec extends SparkSpec {
     // a pre-unit manifest (unit field absent) must refuse — strip the
     // "u" fields and re-ask
     val mf = java.nio.file.Paths.get(root, "_log", "v00000001.manifest.json")
-    val txt = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-    assert(txt.contains("\"u\": \"ts-micros\""))
-    java.nio.file.Files.write(mf,
-      txt.replaceAll(""",\s*"u": "ts-micros"""", "").getBytes("UTF-8"))
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    def statsOf(d: ObjectNode) = d.get("stats").asScala.map(_.asInstanceOf[ObjectNode])
+    assert(statsOf(LogDocs.read(mf)).exists(_.path("u").asText == "ts-micros"))
+    LogDocs.edit(mf)(d => statsOf(d).foreach(_.remove("u")))
     val again = rel(root).agg(min("ts").as("lo"))
     assert(!metaAnswered(again), "an unlabeled timestamp bound must refuse")
     assert(again.collect().head.getTimestamp(0).getTime == 1700000000000L)

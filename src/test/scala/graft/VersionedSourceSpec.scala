@@ -201,10 +201,7 @@ class VersionedSourceSpec extends SparkSpec {
     // mis-resolve on. The running-max adjustment (Delta's recipe)
     // restores version-order monotonicity.
     val m1 = new java.io.File(root, "_log/v00000001.manifest.json")
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(m1.toPath), "UTF-8")
-    java.nio.file.Files.write(m1.toPath,
-      txt.replaceAll(""""cts": \d+,\s*""", "").getBytes("UTF-8"))
+    LogDocs.edit(m1.toPath)(_.remove("cts"))
     val future = System.currentTimeMillis() + 86400000L
     assert(m1.setLastModified(future))
     val stamps = VersionedTable.commitTimestamps(spark, root)
